@@ -101,7 +101,7 @@ def main() -> None:
     payload = json.dumps(full, indent=1, sort_keys=True)
     with open(os.path.join(REPO, "BENCH_FULL.json"), "w") as f:
         f.write(payload)
-    tag = cpus if str(cpus).isdigit() else "all"
+    tag = cpus if str(cpus).isdigit() else "_all"
     with open(os.path.join(REPO, f"BENCH_FULL_c{tag}.json"), "w") as f:
         f.write(payload)
 

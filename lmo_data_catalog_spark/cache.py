@@ -1,12 +1,12 @@
 """Caching contract for shared intermediates.
 
-Several operators (MinHash/SimHash/winnowing dedup, IVF ANN, the
-per-region workbook fan-out) ``persist()`` an intermediate that two or
-more downstream branches of the same plan consume — without it the
-expensive upstream (shingling, signature hashing) re-executes once per
-branch. Those persists are intentional and stay pinned until the
-caller releases them: Spark has no "unpersist once my consumers are
-materialized" hook, and unpersisting eagerly would silently recompute.
+Several operators (MinHash/SimHash/winnowing dedup, IVF ANN)
+``persist()`` an intermediate that two or more downstream branches of
+the same plan consume — without it the expensive upstream (shingling,
+signature hashing) re-executes once per branch. Those persists are
+intentional and stay pinned until the caller releases them: Spark has
+no "unpersist once my consumers are materialized" hook, and
+unpersisting eagerly would silently recompute.
 
 Contract: every operator-level persist goes through :func:`track`, and
 long-lived sessions (notebooks, services) call :func:`release_all`

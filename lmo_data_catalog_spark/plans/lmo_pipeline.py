@@ -1,8 +1,14 @@
 """Full reference-pipeline reproduction (SURVEY §3 shapes 1-3; §7 step 3).
 
 Builds every catalog artifact of ``01_source_me.R`` as lazy DataFrame
-workbooks (``dict[sheet_name, DataFrame]``). No collect anywhere in
-the build path — sinks decide materialization.
+workbooks (``Mapping[sheet_name, DataFrame]``). The four workbooks
+with a sheet per region — the O2 fan-out of tbbl2/7/8 and the HOO
+sheets of tbbl4 — are ``sinks.workbook.SplitWorkbook`` mappings: one
+parent plan plus the column to split it on, so the sink collects each
+once and cuts its sheets on the driver instead of running one Spark
+job per sheet. Building persists nothing and runs one action: the HOO
+sheet→region validation's distinct collect of the openings regions.
+Sinks decide materialization.
 
 Plan shape per metric artifact (tbbl1/2/3/5/7/8; SM:100-118 archetype):
 unpivot (Expand node, narrow) → filter (pushed to scan) → ONE
@@ -22,12 +28,12 @@ sheet name explicitly and validate it against the data.
 from __future__ import annotations
 
 import re
+from collections.abc import Mapping
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import cache
 from ..operators import filters
 from ..operators.reshape import unpivot_years
 from ..schema_toolkit import (
@@ -35,9 +41,10 @@ from ..schema_toolkit import (
     select_by_regex,
     title_case_names,
 )
+from ..sinks.workbook import SplitWorkbook
 from ..sources.ingest import read_csv_skip, read_excel_ingest, remove_empty
 
-Workbook = dict[str, DataFrame]
+Workbook = Mapping[str, DataFrame]
 
 GROUP_KEYS = ["noc", "description", "industry", "variable", "geographic_area"]
 
@@ -171,30 +178,14 @@ def _finalize_headers(df: DataFrame) -> DataFrame:
     return rename_positional(title_case_names(df), 0, "NOC")
 
 
-def _split_by_region(
-    df: DataFrame, drop: list[str]
-) -> Workbook:
+def _split_by_region(df: DataFrame, drop: list[str]) -> SplitWorkbook:
     """O2 fan-out: the combined table first, then one sheet per region
-    (SM:140-145). Regions are a driver-side distinct on an already
-    aggregated (small) table; each per-region sheet is a lazy filter —
-    at scale this is the ``partitionBy`` write path instead.
-
-    ``df`` is persisted: the sinks materialize each sheet
-    independently, and without the cache the upstream unpivot +
-    aggregate would re-execute once per region."""
-    df = cache.track(df)
-    regions = [
-        r[0]
-        for r in df.select("Geographic Area").distinct().orderBy(
-            "Geographic Area"
-        ).collect()
-    ]
-    wb: Workbook = {"data": df}
-    for region in regions:
-        wb[region] = df.filter(
-            F.col("Geographic Area") == region
-        ).drop(*drop)
-    return wb
+    (SM:140-145), each dropping ``drop``. Nothing runs here: the regions
+    are the table's distinct Geographic Areas, found by whoever reads
+    the keys — the workbook sink collects the (small, aggregated) table
+    once and cuts the region sheets from that. At scale this is the
+    ``partitionBy`` write path instead."""
+    return SplitWorkbook({"data": df}, df, "Geographic Area", drop)
 
 
 # ------------------------------------------------------------------- artifacts
@@ -323,28 +314,23 @@ def _sheet_region(sheet: str, cfg: LMOConfig) -> str:
 
 def high_opportunity_occupations(
     inp: LMOInputs, cfg: LMOConfig
-) -> Workbook:
+) -> SplitWorkbook:
     """tbbl4 (SM:169-203): per-region HOO sheets + data dictionary.
 
-    A parameterized query template (SURVEY shape 2): one lazy plan per
-    HOO flag column. The regional openings aggregate is computed once
-    and broadcast into every per-region left join (J1/J3) — the join's
-    right side is |NOC| rows, far under the broadcast threshold.
+    One plan for all sheets: the HOO flag columns are stacked into
+    (sheet, region, flag) rows, the ``Non`` flags dropped, and the
+    regional openings aggregate — |NOC| × |region| rows, far under the
+    broadcast threshold — broadcast into ONE left join on (NOC, region)
+    (J1/J3). The sheet list comes from the schema, so a region with no
+    HOO occupation still gets its header-only sheet.
     """
     occ = inp.occ_char
-    hoo_cols = select_by_regex(occ, "Group: HOO")
-    sheets = sorted(
-        re.sub(rf" {cfg.fyod}E$", "", c.replace("Occ Group: ", ""))
-        for c in hoo_cols
-    )
     col_for_sheet = {
         re.sub(rf" {cfg.fyod}E$", "", c.replace("Occ Group: ", "")): c
-        for c in hoo_cols
+        for c in select_by_regex(occ, "Group: HOO")
     }
     income = "2021 Census Median Employment Income (Employed)"
-    # persist: each of the 8 per-region sheets re-executes the
-    # broadcast build side otherwise (once per sheet materialization)
-    jo_by_region = F.broadcast(cache.track(regional_jo_by_occ(inp, cfg)))
+    jo_by_region = regional_jo_by_occ(inp, cfg)
     # validate sheet→region resolution against the data: an unmatched
     # token (e.g. the vendor's year suffix drifting from cfg.fyod)
     # would otherwise left-join to nothing and silently emit an
@@ -353,10 +339,8 @@ def high_opportunity_occupations(
     known_regions = {
         r[0] for r in jo_by_region.select("Geographic Area").distinct().collect()
     }
-
-    wb: Workbook = {"Data Dictionary": data_dictionary(inp.employment.sparkSession, cfg)}
-    for sheet in sheets:
-        flag_col = col_for_sheet[sheet]
+    stacked = []
+    for sheet in sorted(col_for_sheet):
         region = _sheet_region(sheet, cfg)
         if region not in known_regions:
             raise ValueError(
@@ -365,27 +349,40 @@ def high_opportunity_occupations(
                 f"({sorted(known_regions)}); check cfg.fyod / "
                 "cfg.region_aliases against the vendor's column naming"
             )
-        hoo = (
-            occ.filter(filters.not_rlike(flag_col, "Non"))  # SM:74
-            .select(
-                "NOC",
-                "Description",
-                F.substring("NOC", 3, 1).alias("TEER"),  # SM:76
-                income,
+        stacked.append(
+            F.struct(
+                F.lit(sheet).alias("sheet"),
+                F.lit(region).alias("Geographic Area"),
+                F.col(col_for_sheet[sheet]).alias("flag"),
             )
         )
-        joined = (
-            hoo.join(  # SM:81 natural left join → shared key is NOC
-                jo_by_region.filter(F.col("Geographic Area") == region),
-                on="NOC",
-                how="left",
-            )
-            .select(  # SM:82-83 relocate openings after Description
-                "NOC", "Description", cfg.jo_label, "TEER", income
-            )
+    hoo = (
+        occ.select(
+            "NOC",
+            "Description",
+            F.substring("NOC", 3, 1).alias("TEER"),  # SM:76
+            income,
+            F.inline(F.array(*stacked)),
         )
-        wb[sheet] = joined
-    return wb
+        .filter(filters.not_rlike("flag", "Non"))  # SM:74
+    )
+    joined = (
+        hoo.join(  # SM:81 natural left join, per region sheet
+            F.broadcast(jo_by_region),
+            on=["NOC", "Geographic Area"],
+            how="left",
+        )
+        .select(  # SM:82-83 relocate openings after Description
+            "sheet", "NOC", "Description", cfg.jo_label, "TEER", income
+        )
+    )
+    return SplitWorkbook(
+        {"Data Dictionary": data_dictionary(inp.employment.sparkSession, cfg)},
+        joined,
+        "sheet",
+        drop=["sheet"],
+        split_keys=sorted(col_for_sheet),
+    )
 
 
 def data_dictionary(spark: SparkSession, cfg: LMOConfig) -> DataFrame:

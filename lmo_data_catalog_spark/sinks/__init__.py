@@ -6,6 +6,7 @@ for presentation.
 """
 
 from .workbook import (  # noqa: F401
+    SplitWorkbook,
     compact_parquet,
     write_catalog,
     write_clustered_parquet,

@@ -10,6 +10,13 @@ styling on trailing CAGR columns (``write_last3_percent``,
   ``sources/ingest.py::read_xlsx_rows``) — sheet order, inline
   strings, and the reference's ``0.0%`` percent format on trailing
   CAGR columns, with zero dependencies.
+- Split path — a :class:`SplitWorkbook` (the O2 per-region fan-out,
+  SM:140-145, and the HOO sheets, SM:169-203) is collected ONCE: its
+  parent frame comes to the driver in one ``toPandas`` and every split
+  sheet is a pandas cut of it, so a workbook costs the same Spark jobs
+  whatever its sheet count. Cuts get the dtypes a per-sheet
+  ``toPandas`` would give (:func:`_cut`), so the cells written are the
+  same as a plain dict of the same sheets would produce.
 - S9/S10 — :func:`write_csv_gzip`: distributed gzip CSV; Spark's
   native codec replaces the reference's zip-then-delete dance.
 - Engine-native path — :func:`write_partitioned_parquet`.
@@ -23,9 +30,18 @@ distributed (one file per partition, no driver collect).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    ByteType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StructType,
+)
 
 #: refuse to collect workbooks beyond catalog size (SURVEY §7 E-e:
 #: "no toPandas anywhere in the data plane")
@@ -46,35 +62,145 @@ def _bounded_pandas(df: DataFrame, max_rows: int):
     return pdf
 
 
+class SplitWorkbook(Mapping[str, DataFrame]):
+    """A workbook whose tail sheets are cuts of one parent frame.
+
+    ``head`` sheets come first, in order (``data``, ``Data
+    Dictionary``). Then one sheet per value of ``split_on`` in
+    ``parent``, sorted: the rows with that value, minus the ``drop``
+    columns. ``split_keys`` fixes that sheet list up front, so a key
+    with no rows still gets a header-only sheet; without it the keys
+    are the parent's distinct non-null ``split_on`` values (rows with a
+    null key reach no split sheet).
+
+    Each sheet is still a lazy DataFrame (``wb[sheet]``). Lazy keys
+    cost one distinct collect, paid only by a consumer that iterates
+    the mapping; :func:`write_workbook` instead collects the parent
+    once and cuts every sheet from it on the driver.
+    """
+
+    def __init__(
+        self,
+        head: Mapping[str, DataFrame],
+        parent: DataFrame,
+        split_on: str,
+        drop: Sequence[str] = (),
+        split_keys: Sequence[str] | None = None,
+    ):
+        self.head = dict(head)
+        self.parent = parent
+        self.split_on = split_on
+        self.drop = list(drop)
+        self.split_keys = None if split_keys is None else list(split_keys)
+        self._found_keys: list[str] | None = None
+
+    def _keys(self) -> list[str]:
+        if self.split_keys is not None:
+            return self.split_keys
+        if self._found_keys is None:
+            rows = self.parent.select(self.split_on).distinct().collect()
+            self._found_keys = sorted(r[0] for r in rows if r[0] is not None)
+        return self._found_keys
+
+    def __getitem__(self, sheet: str) -> DataFrame:
+        if sheet in self.head:
+            return self.head[sheet]
+        if sheet not in self._keys():
+            raise KeyError(sheet)
+        return self.parent.filter(F.col(self.split_on) == sheet).drop(*self.drop)
+
+    def __iter__(self) -> Iterator[str]:
+        yield from self.head
+        yield from self._keys()
+
+    def __len__(self) -> int:
+        return len(self.head) + len(self._keys())
+
+
+#: the pandas dtype ``toPandas`` gives a column of these Spark types
+#: when the column holds no null; one null widens integers to float64
+#: and booleans to object
+_NULL_FREE_DTYPES = {
+    ByteType: "int8",
+    ShortType: "int16",
+    IntegerType: "int32",
+    LongType: "int64",
+    BooleanType: "bool",
+}
+
+
+def _cut(parent, schema: StructType, split_on: str, key: str, drop: list[str]):
+    """The rows of the collected ``parent`` whose ``split_on`` is
+    ``key``, minus ``drop``, with the dtypes a ``toPandas`` of that
+    sheet alone would give: an integer column whose nulls all sit in
+    other sheets is written as ``45000``, not ``45000.0``. (Integers
+    beyond 2**53 in such a column were already rounded by the parent's
+    float64.)"""
+    pdf = parent[parent[split_on] == key].drop(columns=drop).reset_index(drop=True)
+    for f in schema.fields:
+        dtype = _NULL_FREE_DTYPES.get(type(f.dataType))
+        if (
+            dtype
+            and f.name in pdf.columns
+            and pdf[f.name].dtype != dtype
+            and pdf[f.name].notna().all()
+        ):
+            pdf[f.name] = pdf[f.name].astype(dtype)
+    return pdf
+
+
+def _collect_sheets(workbook: Mapping[str, DataFrame], max_rows: int) -> dict:
+    """Sheet name → pandas frame: one ``toPandas`` per sheet of a plain
+    mapping, one for the parent of a :class:`SplitWorkbook` (a head
+    sheet that IS the parent reuses it)."""
+    if not isinstance(workbook, SplitWorkbook):
+        return {n: _bounded_pandas(df, max_rows) for n, df in workbook.items()}
+    parent = _bounded_pandas(workbook.parent, max_rows)
+    sheets = {
+        n: parent if df is workbook.parent else _bounded_pandas(df, max_rows)
+        for n, df in workbook.head.items()
+    }
+    keys = workbook.split_keys
+    if keys is None:
+        keys = sorted(parent[workbook.split_on].dropna().unique())
+    schema = workbook.parent.schema
+    for key in keys:
+        sheets[key] = _cut(parent, schema, workbook.split_on, key, workbook.drop)
+    return sheets
+
+
 def write_workbook(
-    workbook: dict[str, DataFrame],
+    workbook: Mapping[str, DataFrame],
     path: str,
     *,
     pct_last3: bool = False,
     as_table: bool = False,
     max_rows: int = DEFAULT_MAX_ROWS,
 ) -> str:
-    """S6/S7/S8 — write an ordered ``dict[sheet_name, DataFrame]``.
+    """S6/S7/S8 — write an ordered ``dict[sheet_name, DataFrame]`` or
+    a :class:`SplitWorkbook`.
 
     Always a REAL .xlsx: ``0.0%`` number format on the last 3 columns
     of every sheet when ``pct_last3`` (matching write_last3_percent;
     values stay raw fractions, SM:52). openpyxl when installed, the
     stdlib zip+XML writer otherwise — same artifact contract either
-    way. Returns the path written.
+    way. ``max_rows`` bounds each collect: every sheet of a plain
+    mapping, the parent of a split one. Returns the path written.
     """
+    frames = _collect_sheets(workbook, max_rows)
     sheets = {}
-    for name, df in workbook.items():
+    for name, pdf in frames.items():
         clean = _sheet_name(name)
         if clean in sheets:
             # two long names truncating to the same 31 chars would
             # silently drop a sheet — disambiguate deterministically
             # (Excel's own behavior for duplicate titles)
-            for i in range(1, len(workbook) + 1):
+            for i in range(1, len(frames) + 1):
                 suffixed = f"{clean[: 31 - len(str(i)) - 1]}~{i}"
                 if suffixed not in sheets:
                     clean = suffixed
                     break
-        sheets[clean] = _bounded_pandas(df, max_rows)
+        sheets[clean] = pdf
     try:
         import openpyxl  # noqa: F401
         import pandas as pd
@@ -298,7 +424,7 @@ def write_clustered_parquet(
 
 
 def write_catalog(
-    artifacts: dict[str, dict[str, DataFrame]],
+    artifacts: Mapping[str, Mapping[str, DataFrame]],
     out_dir: str,
     *,
     metadata: dict[str, dict] | None = None,

@@ -6,6 +6,7 @@ catches silent semantic drift that invariant tests can miss.
 from __future__ import annotations
 
 import math
+import os
 
 import pandas as pd
 import pytest
@@ -18,7 +19,7 @@ from lmo_data_catalog_spark.plans.lmo_pipeline import (
     load_inputs,
 )
 
-GOLDEN = "/root/repo/tests/golden"
+GOLDEN = os.path.join(os.path.dirname(os.path.abspath(__file__)), "golden")
 CFG = LMOConfig()
 
 

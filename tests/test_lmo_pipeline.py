@@ -9,19 +9,26 @@ reference semantics (01_source_me.R).
 from __future__ import annotations
 
 import math
+import zipfile
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from lmo_data_catalog_spark.plans import fixtures
 from lmo_data_catalog_spark.plans.lmo_pipeline import (
     ARTIFACTS,
     LMOConfig,
     build_all,
+    employment_by_occupation,
     high_opportunity_occupations,
     jo_by_skill_cluster,
     load_inputs,
+    regional_jo_by_occ,
 )
+from lmo_data_catalog_spark.sinks import write_catalog, write_workbook
+from lmo_data_catalog_spark.sources.ingest import read_xlsx_rows
 
 CFG = LMOConfig(fyod=2024)
 
@@ -301,6 +308,107 @@ def test_hoo_unresolvable_sheet_region_raises(inputs):
     bad_cfg = LMOConfig(fyod=CFG.fyod, region_aliases={})
     with pytest.raises(ValueError, match="Geographic Area"):
         high_opportunity_occupations(inputs, bad_cfg)
+
+
+def test_hoo_split_sheets_are_type_exact_and_keep_empty_regions(
+    spark, inputs, tmp_path
+):
+    """The HOO sheets are cut from one collected parent. A cut keeps the
+    dtypes a toPandas of that sheet alone gives — income, an int column
+    whose only null sits in another sheet, is written as 45000, not
+    45000.0 — and a flag column that is all Non-HOO still yields its
+    header-only sheet."""
+    income = "2021 Census Median Employment Income (Employed)"
+    flags = [f"Occ Group: HOO {s} {CFG.fyod}E" for s in ("BC", "Cariboo", "Kootenay")]
+    occ = spark.createDataFrame(
+        [
+            ("#00011", "Legislators", "HOO", "Non-HOO", "Non-HOO", 45000),
+            ("#11100", "Financial auditors", "Non-HOO", "Non-HOO", "HOO", None),
+        ],
+        StructType(
+            [StructField(c, StringType()) for c in ["NOC", "Description", *flags]]
+            + [StructField(income, IntegerType())]
+        ),
+    )
+    wb = high_opportunity_occupations(replace(inputs, occ_char=occ), CFG)
+    assert list(wb) == ["Data Dictionary", "HOO BC", "HOO Cariboo", "HOO Kootenay"]
+    split = write_workbook(wb, str(tmp_path / "split.xlsx"))
+    header = ["NOC", "Description", CFG.jo_label, "TEER", income]
+    bc = read_xlsx_rows(split, sheet=1)
+    assert bc[0] == header
+    assert [(r[0], r[4]) for r in bc[1:]] == [("#00011", "45000")]
+    assert read_xlsx_rows(split, sheet=2) == [header]
+    kootenay = read_xlsx_rows(split, sheet=3)
+    assert [r[0] for r in kootenay[1:]] == ["#11100"]
+    assert len(kootenay[1]) == 4  # NULL income: no trailing cell
+    # and byte-for-byte what one toPandas per sheet writes
+    per_sheet = write_workbook(dict(wb.items()), str(tmp_path / "per_sheet.xlsx"))
+    with zipfile.ZipFile(split) as a, zipfile.ZipFile(per_sheet) as b:
+        assert a.namelist() == b.namelist()
+        for part in a.namelist():
+            assert a.read(part) == b.read(part), part
+
+
+def _jobs(spark, action) -> int:
+    """Spark jobs submitted while ``action()`` runs."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    action()
+    return dag.nextJobId() - before
+
+
+def test_build_all_fires_only_the_hoo_validation(spark, inputs):
+    """Plan budget: the builders are lazy. Building the whole catalog
+    runs no Spark job beyond the HOO sheet→region validation's collect
+    of the openings regions."""
+
+    def validation():
+        regional_jo_by_occ(inputs, CFG).select("Geographic Area").distinct().collect()
+
+    validation()  # fills the inputs' caches outside the counted runs
+    assert _jobs(spark, lambda: build_all(inputs, CFG)) <= _jobs(spark, validation)
+
+
+def test_region_fanout_write_jobs_do_not_grow_with_regions(spark, inputs, tmp_path):
+    """Plan budget: writing a region fan-out costs the same Spark jobs
+    for 3 regions as for 8 — one collect of the parent, not one per
+    sheet."""
+    few = replace(
+        inputs,
+        employment=inputs.employment.filter(
+            F.col("Geographic Area").isin(fixtures.AREAS[:3])
+        ),
+    )
+
+    def sheets_and_jobs(inp, name):
+        wb = employment_by_occupation(inp, CFG)
+        jobs = _jobs(spark, lambda: write_workbook(wb, str(tmp_path / name)))
+        return len(wb), jobs
+
+    sheets_and_jobs(inputs, "warm.xlsx")  # the inputs' caches fill here
+    sheets_few, jobs_few = sheets_and_jobs(few, "few.xlsx")
+    sheets_all, jobs_all = sheets_and_jobs(inputs, "all.xlsx")
+    assert (sheets_few, sheets_all) == (4, 9)
+    assert jobs_few == jobs_all
+
+
+def test_write_catalog_persists_only_the_callers_inputs(spark, tmp_path):
+    """Lifetime budget: a build + write_catalog pass leaves persisted
+    exactly the two inputs its caller cached, nothing of its own."""
+    raw = str(tmp_path / "raw")
+    fixtures.generate(raw, fyod=CFG.fyod, seed=3)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    inp = load_inputs(spark, raw)
+    inp.employment.cache()
+    inp.job_openings.cache()
+    try:
+        meta = {name: m for name, (_, m) in ARTIFACTS.items()}
+        write_catalog(build_all(inp, CFG), str(tmp_path / "out"), metadata=meta)
+        assert len(set(jsc.getPersistentRDDs().keySet()) - before) == 2
+    finally:
+        inp.employment.unpersist()
+        inp.job_openings.unpersist()
 
 
 def test_cache_release_all_unpersists(spark):

@@ -22,6 +22,7 @@ from lmo_data_catalog_spark.plans.lmo_pipeline import (
     load_inputs,
 )
 from lmo_data_catalog_spark.sinks import (
+    SplitWorkbook,
     write_catalog,
     write_csv_gzip,
     write_partitioned_parquet,
@@ -39,13 +40,43 @@ def inputs(spark, tmp_path_factory):
     return load_inputs(spark, str(d))
 
 
+def _read_sheets(path):
+    """(name, header, row multiset) of every sheet of an .xlsx, in
+    sheet order. Rows are a multiset: in-sheet order is hash order."""
+    import zipfile
+    from collections import Counter
+    from xml.etree import ElementTree as ET
+
+    from lmo_data_catalog_spark.sources.ingest import read_xlsx_rows
+
+    ssml = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
+    with zipfile.ZipFile(path) as z:
+        wbx = ET.fromstring(z.read("xl/workbook.xml"))
+    out = []
+    for i, sheet in enumerate(wbx.iter(f"{ssml}sheet")):
+        rows = read_xlsx_rows(path, sheet=i)
+        out.append((sheet.get("name"), rows[0], Counter(map(tuple, rows[1:]))))
+    return out
+
+
 def test_full_catalog_materializes(inputs, tmp_path):
+    """Every artifact is written, and every workbook — the split ones
+    included, whose sheets are cut from one collected parent — reads
+    back cell-for-cell as a workbook of its sheets' own lazy frames,
+    each collected on its own."""
     arts = build_all(inputs, CFG)
     meta = {name: m for name, (_, m) in ARTIFACTS.items()}
     written = write_catalog(arts, str(tmp_path / "out"), metadata=meta)
     assert set(written) == set(ARTIFACTS)
     for name, path in written.items():
         assert os.path.exists(path), f"{name} not written at {path}"
+        if meta[name].get("format") == "csv_gzip":
+            continue
+        wb = arts[name]
+        own = write_workbook(
+            {sheet: wb[sheet] for sheet in wb}, str(tmp_path / f"{name}.xlsx")
+        )
+        assert _read_sheets(path) == _read_sheets(own), name
 
 
 def test_workbook_roundtrip_values_order_and_pct_style(inputs, tmp_path):
@@ -132,6 +163,16 @@ def test_workbook_row_guard(inputs, tmp_path):
     big = inputs.job_openings
     with pytest.raises(WorkbookTooLarge):
         write_workbook({"data": big}, str(tmp_path / "big.xlsx"), max_rows=10)
+    # a split workbook is bounded by its parent: one row per area, so
+    # every region sheet fits under max_rows but the parent does not
+    per_area = big.filter(
+        (F.col("NOC") == "#T")
+        & (F.col("Industry") == "All industries")
+        & (F.col("Variable") == "Job Openings")
+    )
+    fanout = SplitWorkbook({}, per_area, "Geographic Area")
+    with pytest.raises(WorkbookTooLarge):
+        write_workbook(fanout, str(tmp_path / "fanout.xlsx"), max_rows=5)
 
 
 def test_clustered_parquet_rowgroup_stats_are_selective(spark, tmp_path):
