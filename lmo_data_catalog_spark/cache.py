@@ -12,9 +12,14 @@ Contract: every operator-level persist goes through :func:`track`, and
 long-lived sessions (notebooks, services) call :func:`release_all`
 between logical units of work. ``bench.py`` does this between queries.
 One-shot jobs can ignore it — executor caches die with the session.
+A scratch directory that a returned lazy frame still reads (a
+builder's on-disk index) goes through :func:`register_dir`, so the
+same :func:`release_all` removes it once the caller's action is done.
 """
 
 from __future__ import annotations
+
+import shutil
 
 from pyspark.sql import DataFrame
 
@@ -30,6 +35,7 @@ from pyspark.sql import DataFrame
 #: release_all() actually release; bench.py now releases between
 #: passes so every timed pass computes from the parquet inputs.
 _TRACKED: list[DataFrame] = []
+_DIRS: list[str] = []
 
 
 def track(df: DataFrame) -> DataFrame:
@@ -50,8 +56,16 @@ def register(df: DataFrame) -> DataFrame:
     return df
 
 
+def register_dir(path: str) -> str:
+    """Register a scratch directory for :func:`release_all` to delete;
+    returns ``path``. Frames built on it stay readable until then."""
+    _DIRS.append(path)
+    return path
+
+
 def release_all() -> int:
-    """Unpersist every tracked DataFrame; returns count. Dropping the
+    """Unpersist every tracked DataFrame and delete every registered
+    directory; returns the number of frames released. Dropping the
     strong refs afterwards also lets the JVM ContextCleaner reclaim
     localCheckpoint RDD blocks (their storage is RDD-level, not
     CacheManager-level, so unpersist alone does not free them)."""
@@ -63,4 +77,7 @@ def release_all() -> int:
         except Exception:  # session already stopped — nothing to free
             pass
     _TRACKED.clear()
+    for path in _DIRS:
+        shutil.rmtree(path, ignore_errors=True)
+    _DIRS.clear()
     return released

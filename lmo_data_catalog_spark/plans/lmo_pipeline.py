@@ -42,7 +42,7 @@ from ..schema_toolkit import (
     title_case_names,
 )
 from ..sinks.workbook import SplitWorkbook
-from ..sources.ingest import read_csv_skip, read_excel_ingest, remove_empty
+from ..sources.ingest import read_csv_skip, read_excel_ingest
 
 Workbook = Mapping[str, DataFrame]
 
@@ -92,11 +92,11 @@ def load_inputs(spark: SparkSession, raw_dir: str) -> LMOInputs:
     from ..sources.ingest import resolve_input
 
     return LMOInputs(
-        employment=remove_empty(
-            read_csv_skip(spark, f"{raw_dir}/employment.csv", skip_rows=3)
+        employment=read_csv_skip(
+            spark, f"{raw_dir}/employment.csv", skip_rows=3, remove_empty=True
         ),
-        job_openings=remove_empty(
-            read_csv_skip(spark, f"{raw_dir}/job_openings.csv", skip_rows=3)
+        job_openings=read_csv_skip(
+            spark, f"{raw_dir}/job_openings.csv", skip_rows=3, remove_empty=True
         ),
         occ_char=read_excel_ingest(
             spark,
@@ -482,10 +482,7 @@ ARTIFACTS = {
         employment_by_occupation,
         {"pct_last3": True},
     ),
-    "Job Openings by Type and Occ for BC and Regions": (
-        jo_by_type_and_occ,
-        {"as_table": True},
-    ),
+    "Job Openings by Type and Occ for BC and Regions": (jo_by_type_and_occ, {}),
     "Job Openings by NOC and Skill Cluster": (
         lambda inp, cfg: {"data": jo_by_skill_cluster(inp, cfg)},
         {},

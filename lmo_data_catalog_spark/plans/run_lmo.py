@@ -5,9 +5,9 @@
 Reads the four raw inputs from RAW_DIR (employment.csv,
 job_openings.csv, "Occupational Characteristics*", clusters.csv —
 01_source_me.R:87-97), builds all 10 catalog artifacts lazily, and
-materializes them through the sink adapters (xlsx when openpyxl is
-present, the dependency-free stdlib xlsx writer otherwise; gzip
-CSV). ``--demo`` generates synthetic fixtures into RAW_DIR first.
+materializes them through the sink adapters (the dependency-free
+stdlib xlsx writer; gzip CSV). ``--demo`` generates synthetic
+fixtures into RAW_DIR first.
 """
 
 from __future__ import annotations

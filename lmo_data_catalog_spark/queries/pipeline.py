@@ -4625,8 +4625,10 @@ def pq_index_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         iters=3,
         return_state=True,
     )
+    # the returned frame reads the index dir until the caller's action
+    # is done; cache.release_all() removes it afterwards
     ix = PqIvfIndexState(
-        spark, tempfile.mkdtemp(prefix="pq-ivf-serve-"), state
+        spark, cache.register_dir(tempfile.mkdtemp(prefix="pq-ivf-serve-")), state
     )
     ix.ingest(e.filter(F.col("vec_id") % 2 == 0))
     ix.ingest(e.filter(F.col("vec_id") % 2 == 1))

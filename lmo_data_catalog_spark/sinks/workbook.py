@@ -5,11 +5,12 @@ styling on trailing CAGR columns (``write_last3_percent``,
 01_source_me.R:34-49) plus one zipped long CSV (:309-317). Here:
 
 - S6/S7/S8 — :func:`write_workbook`: ``dict[sheet, DataFrame]`` →
-  one REAL .xlsx always: openpyxl when available, else the stdlib
-  zip+XML writer (:func:`_write_xlsx_stdlib`, the mirror of
+  one REAL .xlsx through the stdlib zip+XML writer
+  (:func:`_write_xlsx_stdlib`, the mirror of
   ``sources/ingest.py::read_xlsx_rows``) — sheet order, inline
   strings, and the reference's ``0.0%`` percent format on trailing
-  CAGR columns, with zero dependencies.
+  CAGR columns, with zero dependencies. The reference's
+  ``asTable=TRUE`` table styling is not reproduced.
 - Split path — a :class:`SplitWorkbook` (the O2 per-region fan-out,
   SM:140-145, and the HOO sheets, SM:169-203) is collected ONCE: its
   parent frame comes to the driver in one ``toPandas`` and every split
@@ -174,7 +175,6 @@ def write_workbook(
     path: str,
     *,
     pct_last3: bool = False,
-    as_table: bool = False,
     max_rows: int = DEFAULT_MAX_ROWS,
 ) -> str:
     """S6/S7/S8 — write an ordered ``dict[sheet_name, DataFrame]`` or
@@ -182,9 +182,8 @@ def write_workbook(
 
     Always a REAL .xlsx: ``0.0%`` number format on the last 3 columns
     of every sheet when ``pct_last3`` (matching write_last3_percent;
-    values stay raw fractions, SM:52). openpyxl when installed, the
-    stdlib zip+XML writer otherwise — same artifact contract either
-    way. ``max_rows`` bounds each collect: every sheet of a plain
+    values stay raw fractions, SM:52), written by the stdlib zip+XML
+    writer. ``max_rows`` bounds each collect: every sheet of a plain
     mapping, the parent of a split one. Returns the path written.
     """
     frames = _collect_sheets(workbook, max_rows)
@@ -201,21 +200,7 @@ def write_workbook(
                     clean = suffixed
                     break
         sheets[clean] = pdf
-    try:
-        import openpyxl  # noqa: F401
-        import pandas as pd
-    except ImportError:
-        return _write_xlsx_stdlib(sheets, path, pct_last3=pct_last3)
-
-    with pd.ExcelWriter(path, engine="openpyxl") as xl:
-        for name, pdf in sheets.items():
-            pdf.to_excel(xl, sheet_name=name, index=False)
-            if pct_last3 and len(pdf.columns) >= 3:
-                ws = xl.sheets[name]
-                for col_idx in range(len(pdf.columns) - 2, len(pdf.columns) + 1):
-                    for row_idx in range(2, len(pdf) + 2):
-                        ws.cell(row=row_idx, column=col_idx).number_format = "0.0%"
-    return path
+    return _write_xlsx_stdlib(sheets, path, pct_last3=pct_last3)
 
 
 def _sheet_name(n: str) -> str:
@@ -448,7 +433,6 @@ def write_catalog(
                 wb,
                 os.path.join(out_dir, f"{name}.xlsx"),
                 pct_last3=meta.get("pct_last3", False),
-                as_table=meta.get("as_table", False),
             )
     return written
 

@@ -3,6 +3,5 @@
 from .ingest import (  # noqa: F401
     read_csv_skip,
     read_excel_ingest,
-    remove_empty,
     resolve_input,
 )

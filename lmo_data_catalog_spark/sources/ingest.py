@@ -5,22 +5,43 @@ sentinels: ``vroom(..., skip=3)`` (01_source_me.R:87,90),
 ``read_excel(..., skip=3, na="x")`` (:93-97), glob resolution
 (:94-96), ``janitor::remove_empty()`` (:88,91).
 
-Scale notes: banner-skipping CSVs and Excel are *landing-zone*
-formats. The engine's contract is: ingest once → typed Parquet →
-everything downstream reads Parquet through :class:`..catalog.Catalog`
-(pushdown, pruning, splittable files). These readers are the one-time
-landing step, sized for raw vendor drops, not the 100 TB hot path.
+Both landing formats run one JVM-only pass per input: CSV lines come
+from ``spark.read.text`` + ``from_csv``, xlsx cell texts from the
+stdlib :func:`read_xlsx_rows` as one JSON literal. Either way the
+all-string columns are typed by ONE rule in ONE aggregate
+(:func:`_land`): the narrowest of int → bigint → double that every
+non-null value passes under Spark's ``try_cast``, else string. Versus
+the CSV ``inferSchema`` this replaced: boolean, date and timestamp
+columns land as string; decimal columns (integers beyond bigint,
+``"5."``) as double; space-padded ints (``" 7"``) as int, not double;
+``"inf"`` as double, not string. No LMO input has such a column.
+
+Scale notes: these are *landing-zone* readers, sized for raw vendor
+drops. The engine's contract is: ingest once → typed Parquet →
+everything downstream reads Parquet through :class:`..catalog.Catalog`.
 """
 
 from __future__ import annotations
 
+import csv
 import glob as _glob
+import json
 import os
+from collections import Counter
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+#: the column types a landed column may take, narrowest first
+_LADDER = ("int", "bigint", "double")
+#: ``monotonically_increasing_id`` keeps the partition index above bit
+#: 33, so exactly the rows of split 0 have ids below this
+_SPLIT0_END = 1 << 33
+#: the CSV reader's blank-line test (``line.trim.nonEmpty``)
+_NON_BLANK = r"[^\x00-\x20]"
 
 
 def resolve_input(directory: str, pattern: str) -> str:
@@ -43,56 +64,94 @@ def read_csv_skip(
     path: str,
     *,
     skip_rows: int = 0,
-    header: bool = True,
     schema: StructType | str | None = None,
     na_values: Sequence[str] = (),
     mode: str = "PERMISSIVE",
+    remove_empty: bool = False,
 ) -> DataFrame:
     """S1 — CSV scan with leading banner rows skipped (01_source_me.R:87).
 
-    Spark's CSV source has no skip-N option, so banner rows are dropped
-    per-file via ``zipWithIndex`` on the text lines (deterministic:
-    ``textFile`` preserves in-file line order under the index). Globs
-    are resolved driver-side so the skip applies to *each* file, then
-    the per-file line RDDs are unioned and CSV-parsed once.
-
-    ``mode`` is the Spark CSV parse mode and matters at the landing
-    zone: ``PERMISSIVE`` (default) nulls out malformed cells,
-    ``DROPMALFORMED`` silently drops bad lines, ``FAILFAST`` raises on
-    the first malformed line — annual vendor drops usually want
-    FAILFAST so a truncated file is caught at ingest, not as NULLs
-    three joins later.
+    Each file of ``path`` (a glob is resolved on the driver, so the
+    skip applies per file) is read as text, numbered by
+    ``monotonically_increasing_id``. Its header is the first non-blank
+    line at id ≥ ``skip_rows`` (one ``first()``); lines up to it are
+    dropped. Only split 0 numbers from 0, so a header outside split 0
+    raises rather than drop the wrong lines. The rest is parsed by
+    ``from_csv``: against ``schema`` if given, else as strings named
+    from the first file's header the way Spark's CSV reader names them
+    (``_c<i>`` for empty names, index-suffixed duplicates) and typed
+    by :func:`_land`. ``remove_empty`` (S5) drops all-null columns and
+    rows in that same pass. ``mode`` is ``PERMISSIVE`` (missing cells
+    become NULL) or ``FAILFAST`` (a truncated vendor file raises at
+    ingest, not as NULLs three joins later); ``from_csv`` has no other.
     """
-    files = sorted(_glob.glob(path)) or [path]
-    sc = spark.sparkContext
-    rdds = []
-    for f in files:
-        lines = sc.textFile(f)
-        if skip_rows > 0:
-            lines = (
-                lines.zipWithIndex()
-                .filter(lambda kv: kv[1] >= skip_rows)  # noqa: B023
-                .keys()
-            )
-        rdds.append(lines)
-    union = rdds[0] if len(rdds) == 1 else sc.union(rdds)
-    reader = spark.read.option("header", header).option("mode", mode)
-    if na_values:
-        # Spark CSV supports a single nullValue token; the reference
-        # needs exactly one ("x", 01_source_me.R:97). Reject silently
-        # ignoring extras.
-        if len(list(na_values)) > 1:
-            raise ValueError(
-                "read_csv_skip supports exactly one NA sentinel "
-                f"(got {list(na_values)!r}); pre-normalize the file or "
-                "post-process with replace()"
-            )
-        reader = reader.option("nullValue", list(na_values)[0])
+    if mode not in ("PERMISSIVE", "FAILFAST"):
+        raise ValueError(f"mode must be PERMISSIVE or FAILFAST, not {mode!r}")
+    if schema is not None and remove_empty:
+        raise ValueError("remove_empty applies to the typed landing, not a schema")
+    # from_csv takes one nullValue token; the reference needs one ("x", SM:97)
+    na_values = list(na_values)
+    if len(na_values) > 1:
+        raise ValueError(f"exactly one NA sentinel is supported, got {na_values!r}")
+    options = {"mode": mode, "nullValue": na_values[0] if na_values else ""}
+    header, bodies = None, []
+    for f in sorted(_glob.glob(path)) or [path]:
+        lines = (
+            spark.read.text(f)
+            .select(F.monotonically_increasing_id().alias("id"), "value")
+            .filter(F.col("value").rlike(_NON_BLANK))
+        )
+        first = lines.filter(F.col("id") >= skip_rows).first()
+        if first is None or first.id >= _SPLIT0_END:
+            raise ValueError(f"{f!r}: no header in split 0 after {skip_rows} rows")
+        header = header or first.value
+        bodies.append(lines.filter(F.col("id") > first.id).select("value"))
+    body = reduce(DataFrame.union, bodies)
+
+    def parse(ddl):
+        return body.select(F.from_csv("value", ddl, options).alias("r")).select("r.*")
+
     if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", True)
-    return reader.csv(union)
+        return parse(schema.json() if isinstance(schema, StructType) else schema)
+    names = _header_names(next(csv.reader([header], escapechar="\\")), na_values)
+    strings = parse(", ".join(f"_{i} string" for i in range(len(names))))
+    return _land(strings, names, remove_empty=remove_empty)
+
+
+def _header_names(tokens: Sequence[str | None], na_values: Sequence[str]) -> list[str]:
+    """Column names from a header row, as Spark's CSV reader makes
+    them: an empty, missing or NA-sentinel name becomes ``_c<i>``, and
+    each case-insensitive duplicate gets its index appended."""
+    blank = {None, "", *na_values}
+    dup = Counter(t.lower() for t in tokens if t not in blank)
+    return [
+        f"_c{i}" if t in blank else f"{t}{i}" if dup[t.lower()] > 1 else t
+        for i, t in enumerate(tokens)
+    ]
+
+
+def _land(strings: DataFrame, names: list[str], *, remove_empty: bool) -> DataFrame:
+    """Type the all-string columns ``_0 … _<n-1>`` of ``strings`` by the
+    one rule and name them ``names``. One aggregate counts per column
+    the non-nulls and the values passing ``try_cast`` to each rung of
+    :data:`_LADDER`; an all-null column is string, or dropped with the
+    all-null rows under ``remove_empty``."""
+    cols = [F.col(f"_{i}") for i in range(len(names))]
+    rule = ("string", *_LADDER)
+    # one SQL text per count: a single py4j call builds the whole aggregate
+    stats = strings.selectExpr(
+        *[f"count(try_cast(_{i} AS {t}))" for i in range(len(names)) for t in rule]
+    ).first()
+    out = []
+    for i, name in enumerate(names):
+        n, *passed = stats[i * len(rule) : (i + 1) * len(rule)]
+        if remove_empty and n == 0:
+            continue
+        kind = next((t for t, m in zip(_LADDER, passed) if n and m == n), "string")
+        out.append(cols[i].try_cast(kind).alias(name))
+    if remove_empty:
+        strings = strings.filter(F.coalesce(*cols).isNotNull())
+    return strings.select(*out)
 
 
 _SSML = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
@@ -172,28 +231,6 @@ def read_xlsx_rows(path: str, *, sheet: int = 0) -> list[list[str | None]]:
         return rows
 
 
-def _infer_column(values: list[str | None]):
-    """CSV-inferSchema-alike type unification for one column of cell
-    texts: int → long → double → string, same ladder Spark's CSV
-    inference climbs."""
-    kind = "int"
-    for v in values:
-        if v is None:
-            continue
-        try:
-            if not -(2**31) <= int(v) < 2**31:
-                kind = "long" if kind == "int" else kind
-        except ValueError:
-            try:
-                float(v)
-            except ValueError:
-                return "string", [v for v in values]
-            kind = "double"
-    if kind in ("int", "long"):
-        return kind, [None if v is None else int(v) for v in values]
-    return "double", [None if v is None else float(v) for v in values]
-
-
 def read_excel_ingest(
     spark: SparkSession,
     path: str,
@@ -201,17 +238,12 @@ def read_excel_ingest(
     skip_rows: int = 0,
     na_values: Sequence[str] = ("x",),
 ) -> DataFrame:
-    """S2 — Excel landing read (01_source_me.R:93-97).
-
-    Spark has no core Excel source; ingestion goes driver-side through
-    the stdlib :func:`read_xlsx_rows` (bounded: vendor workbooks are
-    catalog-sized) then ``createDataFrame``. Semantics mirror the
-    reference's ``read_excel(skip=3, na="x")``: drop ``skip_rows``
-    leading banner rows, first surviving row is the header, cells
-    equal to an NA sentinel become NULL, and column types are unified
-    int → float → string exactly like the CSV fallback's inferSchema.
-    A ``.csv`` path routes to :func:`read_csv_skip` (identical
-    skip + NA semantics) so both landing formats share one contract.
+    """S2 — Excel landing read (01_source_me.R:93-97), the reference's
+    ``read_excel(skip=3, na="x")``: drop ``skip_rows`` leading rows,
+    take the next as the header, NULL the NA-sentinel cells, and type
+    the columns by :func:`_land` as the CSV path does. The cell texts
+    (catalog-sized) enter the plan as one JSON literal, so no Python
+    RDD backs the frame. A ``.csv`` path routes to :func:`read_csv_skip`.
     """
     if path.endswith(".csv"):
         return read_csv_skip(
@@ -220,37 +252,15 @@ def read_excel_ingest(
     raw = read_xlsx_rows(path)[skip_rows:]
     if not raw:
         raise ValueError(f"{path!r}: no rows after skipping {skip_rows}")
-    header = [str(h) if h is not None else f"_c{i}" for i, h in enumerate(raw[0])]
-    width = len(header)
+    names = _header_names(raw[0], na_values)
+    width = len(names)
     na = set(na_values)
     body = [
         [None if v in na else v for v in (r + [None] * width)[:width]]
         for r in raw[1:]
     ]
-    cols = [_infer_column([r[i] for r in body]) for i in range(width)]
-    schema = ", ".join(
-        f"`{name}` {cols[i][0]}" for i, name in enumerate(header)
+    rows = F.explode(F.from_json(F.lit(json.dumps(body)), "array<array<string>>"))
+    strings = spark.range(1).select(rows.alias("r")).select(
+        *[F.col("r")[i].alias(f"_{i}") for i in range(width)]
     )
-    data = [tuple(cols[i][1][j] for i in range(width)) for j in range(len(body))]
-    return spark.createDataFrame(data, schema=schema)
-
-
-def remove_empty(
-    df: DataFrame, *, rows: bool = True, cols: bool = True
-) -> DataFrame:
-    """S5 — drop all-NULL rows and all-NULL columns (01_source_me.R:88).
-
-    Rows: ``na.drop(how="all")`` (distributed, no shuffle). Columns:
-    one aggregate pass counting non-nulls per column — a single job
-    whose result is a 1-row driver fetch, then a plain ``select`` of
-    the survivors (column pruning reaches the scan).
-    """
-    out = df.na.drop(how="all") if rows else df
-    if cols:
-        counts = out.agg(
-            *[F.count(F.col(c)).alias(c) for c in out.columns]
-        ).first()
-        keep = [c for c in out.columns if counts[c] > 0]
-        if len(keep) < len(out.columns):
-            out = out.select(*keep)
-    return out
+    return _land(strings, names, remove_empty=False)

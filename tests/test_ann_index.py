@@ -125,6 +125,24 @@ def test_persisted_query_matches_registry_rebuild(
         assert abs(g["cosine"] - w["cosine"]) < 5e-7
 
 
+def test_registry_index_dir_is_removed_by_release_all(spark):
+    """pq_index_query_topk builds its index in a temp dir that the
+    returned frame reads until it is forced; cache.release_all()
+    removes that dir afterwards, so a call leaks no directory."""
+    import glob
+    import tempfile
+
+    from lmo_data_catalog_spark import cache
+    from lmo_data_catalog_spark.registry import REGISTRY
+
+    pattern = os.path.join(tempfile.gettempdir(), "pq-ivf-serve-*")
+    before = set(glob.glob(pattern))
+    df = REGISTRY["pq_index_query_topk"].builder(spark, SF)
+    assert len(df.collect()) == 10
+    cache.release_all()
+    assert set(glob.glob(pattern)) <= before
+
+
 def test_streaming_sink_equals_batch_build_and_replay_is_noop(
     spark, vectors, cell_sums, tmp_path
 ):

@@ -9,6 +9,7 @@ reference semantics (01_source_me.R).
 from __future__ import annotations
 
 import math
+import re
 import zipfile
 from dataclasses import replace
 
@@ -175,7 +176,7 @@ def test_read_csv_skip_multifile_glob(spark, tmp_path):
 def test_read_csv_skip_failfast_catches_malformed(spark, tmp_path):
     """Landing-zone parse modes: FAILFAST raises on a malformed line
     (truncated vendor file caught at ingest); PERMISSIVE nulls the
-    missing cells and keeps the row."""
+    missing cells and keeps the row; any other mode is rejected."""
     f = tmp_path / "trunc.csv"
     # numeric col so a short row is a real type/arity violation
     f.write_text("banner\nk,v\na,1\nb\nc,3\n")
@@ -192,6 +193,9 @@ def test_read_csv_skip_failfast_catches_malformed(spark, tmp_path):
         read_csv_skip(
             spark, str(f), skip_rows=1, schema=schema, mode="FAILFAST"
         ).collect()
+    # from_csv has no other mode: any other is refused at build time
+    with pytest.raises(ValueError, match="DROPMALFORMED"):
+        read_csv_skip(spark, str(f), skip_rows=1, schema=schema, mode="DROPMALFORMED")
 
 
 def _write_minimal_xlsx(path, rows):
@@ -300,6 +304,93 @@ def test_read_excel_ingest_real_xlsx(spark, tmp_path):
     want = sorted(map(tuple, ref.collect()))
     assert got == want
     assert got[1] == ("#21301", None, 2.25)  # sentinel became NULL
+
+
+#: one column per value: the 9 on which Spark's CSV inferSchema and a
+#: Python int/float ladder disagree, then 7 plain ones
+EDGE_VALUES = [
+    "1_000", " 7", "inf", "true", "2024-01-01", "5.", "1d", "1f",
+    "12345678901234567890", "42", "-3", "2147483648", "1.5", "1e5",
+    "-0", "abc",
+]
+
+
+def test_csv_and_xlsx_land_edge_values_by_one_rule(spark, tmp_path):
+    """Both landing formats type a column by the one rule: the
+    narrowest of int → bigint → double that every non-null value
+    passes under Spark's try_cast, else string."""
+    from lmo_data_catalog_spark.sources.ingest import (
+        read_csv_skip,
+        read_excel_ingest,
+    )
+
+    header = [f"c{i}" for i in range(len(EDGE_VALUES))]
+    xlsx = tmp_path / "edge.xlsx"
+    _write_minimal_xlsx(xlsx, [["banner"], header, EDGE_VALUES, [None] * 16])
+    csv = tmp_path / "edge.csv"
+    lines = ["banner", ",".join(header), ",".join(EDGE_VALUES), "," * 15]
+    csv.write_text("\n".join(lines) + "\n")
+    from_csv = read_csv_skip(spark, str(csv), skip_rows=1)
+    from_xlsx = read_excel_ingest(spark, str(xlsx), skip_rows=1, na_values=())
+
+    assert from_csv.schema == from_xlsx.schema
+    assert [f.dataType.simpleString() for f in from_csv.schema] == [
+        "string", "int", "double", "string", "string", "double", "double",
+        "double", "double", "int", "int", "bigint", "double", "double",
+        "int", "string",
+    ]
+    got_csv, got_xlsx = (
+        sorted(map(tuple, df.collect()), key=repr) for df in (from_csv, from_xlsx)
+    )
+    assert got_csv == got_xlsx
+    assert got_csv[0][:3] == ("1_000", 7, float("inf"))
+    assert got_csv[1] == (None,) * 16
+
+
+#: plan nodes that cross into Python: a Python RDD scan (ExistingRDD)
+#: and the Python exec nodes (BatchEvalPython, ArrowEvalPython,
+#: MapInPandas, FlatMapGroupsInPandas, PythonMapInArrow, ...)
+PYTHON_NODES = r"ExistingRDD|PythonRDD|EvalPython|InPandas|InArrow"
+
+
+def test_load_inputs_plans_are_jvm_only(spark, raw_dir):
+    """No input plan holds a Python RDD or a Python exec node: the
+    banner skip, the parse and the typing all run in the JVM."""
+    inp = load_inputs(spark, raw_dir)
+    for name in ("employment", "job_openings", "occ_char", "clusters"):
+        plan = getattr(inp, name)._jdf.queryExecution().executedPlan().toString()
+        assert not re.search(PYTHON_NODES, plan), (name, plan)
+
+
+def test_load_inputs_fires_at_most_three_jobs_per_input(spark, raw_dir):
+    """Job budget: per input one header fetch and one typing aggregate
+    (a shuffle-map job plus its result job); remove_empty adds none."""
+    assert _jobs(spark, lambda: load_inputs(spark, raw_dir)) <= 3 * 4
+
+
+def test_read_csv_skip_raises_when_banner_overruns_split0(spark, tmp_path):
+    """The banner and header are dropped by row id, which only split 0
+    numbers from 0. A split 0 shorter than the banner must raise, not
+    drop the wrong lines; a long body spread over many splits lands
+    whole."""
+    from lmo_data_catalog_spark.sources.ingest import read_csv_skip
+
+    long_banner = tmp_path / "long_banner.csv"
+    long_banner.write_text(
+        "a banner line far longer than one split\nsecond\nthird\nk,v\na,1\n"
+    )
+    many_splits = tmp_path / "many_splits.csv"
+    many_splits.write_text("b\nk,v\n" + "".join(f"r{i},{i}\n" for i in range(40)))
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try:
+        with pytest.raises(ValueError, match="split 0"):
+            read_csv_skip(spark, str(long_banner), skip_rows=3)
+        got = read_csv_skip(spark, str(many_splits), skip_rows=1).collect()
+    finally:
+        spark.conf.set(key, old)
+    assert sorted((r.k, r.v) for r in got) == sorted((f"r{i}", i) for i in range(40))
 
 
 def test_hoo_unresolvable_sheet_region_raises(inputs):

@@ -27,17 +27,19 @@ Usage: python tools/bucket_probe.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-EXPLAINS = Path("/root/repo/explains")
+EXPLAINS = Path(ROOT) / "explains"
 
 
 def exchanges(df) -> int:

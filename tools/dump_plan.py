@@ -9,13 +9,14 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from lmo_data_catalog_spark import cache  # noqa: E402
 from lmo_data_catalog_spark.registry import REGISTRY  # noqa: E402
 from lmo_data_catalog_spark.session import get_spark  # noqa: E402
 
-OUT = "/root/repo/plans/r15"
+OUT = os.path.join(ROOT, "plans", "r15")
 
 
 def main() -> int:

@@ -14,12 +14,14 @@ Usage: python tools/ivfadc_trained_probe.py
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from lmo_data_catalog_spark.functions.pq_codebook import (  # noqa: E402
     CODEBOOK,

@@ -17,7 +17,7 @@ just the final sink job.  A query whose wall time is dominated by
 per-job fixed overhead shows up as jobs >> 1 with small task counts.
 
 Usage: python tools/job_profile.py [--runs N] [query ...]
-Writes /root/repo/plans/r15/job_profile.json and prints a table.
+Writes plans/r15/job_profile.json (under the checkout) and prints a table.
 """
 
 from __future__ import annotations
@@ -27,7 +27,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from lmo_data_catalog_spark import cache  # noqa: E402
 from lmo_data_catalog_spark.registry import REGISTRY  # noqa: E402
@@ -87,8 +88,8 @@ def main() -> int:
         finally:
             cache.release_all()
 
-    os.makedirs("/root/repo/plans/r15", exist_ok=True)
-    path = "/root/repo/plans/r15/job_profile.json"
+    os.makedirs(os.path.join(ROOT, "plans", "r15"), exist_ok=True)
+    path = os.path.join(ROOT, "plans", "r15", "job_profile.json")
     prev = {}
     if os.path.exists(path):
         with open(path) as f:

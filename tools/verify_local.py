@@ -21,7 +21,8 @@ import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 #: DuckDB / Spark integer type → (bit width, signed).  Used to flag
