@@ -23,13 +23,23 @@ Scale notes (100 TB design point):
   keeps its old config) and 32 cores at 6g. On a real cluster use
   executor memory settings instead (this knob only matters for
   local mode, where it IS the executor memory).
+
+:func:`run_concurrently` runs independent Spark actions side by side
+from driver threads: a catalog-sized job of 1-2 tasks leaves most task
+slots idle, so its time is the per-job floor, which overlaps.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Mapping
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
+
+T = TypeVar("T")
 
 
 def get_spark(
@@ -70,3 +80,27 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def run_concurrently(
+    spark: SparkSession, calls: Mapping[str, Callable[[], T]]
+) -> dict[str, T]:
+    """Run independent zero-arg thunks on driver threads; return name →
+    result in ``calls`` order.
+
+    The pool has ``min(len(calls), defaultParallelism)`` threads: more
+    would only queue jobs for task slots that are all busy. Each thunk
+    is wrapped by its own ``inheritable_thread_target(spark)`` call, so
+    its thread starts from its own clone of the caller's local
+    properties (job group, scheduler pool) and session tags; one shared
+    clone would let a thread's ``setJobGroup`` leak into the others.
+    Every thunk runs to the end; then the first failure in ``calls``
+    order is re-raised.
+    """
+    workers = min(len(calls), spark.sparkContext.defaultParallelism) or 1
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(thunk))
+            for name, thunk in calls.items()
+        }
+    return {name: f.result() for name, f in futures.items()}

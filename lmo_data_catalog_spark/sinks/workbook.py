@@ -20,6 +20,11 @@ styling on trailing CAGR columns (``write_last3_percent``,
   same as a plain dict of the same sheets would produce.
 - S9/S10 — :func:`write_csv_gzip`: distributed gzip CSV; Spark's
   native codec replaces the reference's zip-then-delete dance.
+- The catalog — :func:`write_catalog` writes its ~10 artifacts
+  concurrently from driver threads. Each costs a few Spark jobs of 1-2
+  tasks, whose time is the per-job floor, so the writes overlap; each
+  file's bytes depend only on its own frames, so the result equals a
+  sequential write and there is no option to turn it off.
 - Engine-native path — :func:`write_partitioned_parquet`.
 
 Scale notes: workbook sinks ``toPandas`` by design and guard against
@@ -33,7 +38,7 @@ from __future__ import annotations
 import os
 from collections.abc import Iterator, Mapping, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -43,6 +48,8 @@ from pyspark.sql.types import (
     ShortType,
     StructType,
 )
+
+from ..session import run_concurrently
 
 #: refuse to collect workbooks beyond catalog size (SURVEY §7 E-e:
 #: "no toPandas anywhere in the data plane")
@@ -223,7 +230,8 @@ def _write_xlsx_stdlib(sheets, path: str, *, pct_last3: bool) -> str:
     whose custom numFmt 164 is the reference's ``0.0%`` tag
     (01_source_me.R:34-49) applied as ``s="1"`` on the data cells of
     each sheet's last 3 columns. Produces standard OOXML any Excel /
-    LibreOffice / pandas stack opens."""
+    LibreOffice / pandas stack opens. Every part carries the same fixed
+    timestamp, so equal frames give byte-equal files."""
     import math
     import zipfile
     from xml.sax.saxutils import escape as _esc
@@ -345,18 +353,26 @@ def _write_xlsx_stdlib(sheets, path: str, *, pct_last3: bool) -> str:
         f'<Relationship Id="rId1" Type="{odrel}/officeDocument" '
         'Target="xl/workbook.xml"/></Relationships>'
     )
-    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as z:
-        z.writestr("[Content_Types].xml", content_types)
-        z.writestr("_rels/.rels", root_rels)
-        z.writestr("xl/workbook.xml", workbook_xml)
+    def part(name: str) -> zipfile.ZipInfo:
+        # a fixed timestamp (the zip epoch) instead of the wall clock
+        # writestr would stamp: the same frames give the same bytes
+        info = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
+        info.compress_type = zipfile.ZIP_DEFLATED
+        info.external_attr = 0o600 << 16
+        return info
+
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr(part("[Content_Types].xml"), content_types)
+        z.writestr(part("_rels/.rels"), root_rels)
+        z.writestr(part("xl/workbook.xml"), workbook_xml)
         z.writestr(
-            "xl/_rels/workbook.xml.rels",
+            part("xl/_rels/workbook.xml.rels"),
             '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
             f'<Relationships xmlns="{pkgrel}">{wb_rels}</Relationships>',
         )
-        z.writestr("xl/styles.xml", styles_xml)
+        z.writestr(part("xl/styles.xml"), styles_xml)
         for i, n in enumerate(names):
-            z.writestr(f"xl/worksheets/sheet{i+1}.xml", sheet_xml(sheets[n]))
+            z.writestr(part(f"xl/worksheets/sheet{i+1}.xml"), sheet_xml(sheets[n]))
     return path
 
 
@@ -417,24 +433,38 @@ def write_catalog(
     """Materialize every built artifact with its sink metadata
     (plans.lmo_pipeline.ARTIFACTS): csv_gzip formats go through the
     distributed CSV sink, everything else through the workbook sink.
-    Returns artifact name → written path."""
+    Returns artifact name → written path, in ``artifacts`` order.
+
+    The artifacts are independent, and each costs a few Spark jobs of
+    1-2 tasks, so they are written concurrently
+    (:func:`..session.run_concurrently`), each job under the caller's
+    job group. A file's bytes depend only on its own frames, so the
+    catalog is the one a sequential loop writes: nothing to choose, no
+    option. If one artifact fails, every other is still written in full
+    before the first failure is raised.
+    """
     os.makedirs(out_dir, exist_ok=True)
     metadata = metadata or {}
-    written = {}
-    for name, wb in artifacts.items():
+
+    # the thunks look both writers up as module globals when they run,
+    # so a wrapper patched onto either one sees every write
+    def thunk(name: str, wb: Mapping[str, DataFrame]):
         meta = metadata.get(name, {})
         if meta.get("format") == "csv_gzip":
             (df,) = wb.values()
-            written[name] = write_csv_gzip(
-                df, os.path.join(out_dir, name), single_file=True
-            )
-        else:
-            written[name] = write_workbook(
-                wb,
-                os.path.join(out_dir, f"{name}.xlsx"),
-                pct_last3=meta.get("pct_last3", False),
-            )
-    return written
+            path = os.path.join(out_dir, name)
+            return lambda: write_csv_gzip(df, path, single_file=True)
+        path = os.path.join(out_dir, f"{name}.xlsx")
+        return lambda: write_workbook(
+            wb, path, pct_last3=meta.get("pct_last3", False)
+        )
+
+    # the session comes from the caller, not from a workbook: iterating
+    # a SplitWorkbook's keys is a distinct collect
+    return run_concurrently(
+        SparkSession.active(),
+        {name: thunk(name, wb) for name, wb in artifacts.items()},
+    )
 
 
 def zorder_key(cols: list[str], *, bits: int = 16) -> "F.Column":

@@ -180,7 +180,10 @@ def read_xlsx_rows(path: str, *, sheet: int = 0) -> list[list[str | None]]:
     (``t="inlineStr"``), and raw ``<v>`` texts for numbers. Sparse
     rows keep positional fidelity: a cell's ``r="D7"`` ref places it
     at column 3 with None-padding, matching what a CSV export of the
-    sheet would show as empty fields. No styles, no dates-as-serials
+    sheet would show as empty fields. Rows are numbered by their
+    ``r="N"`` the same way: Excel leaves blank rows out of the sheet
+    XML, and each one comes back as an empty list, so row ``i`` of the
+    result is sheet row ``i + 1``. No styles, no dates-as-serials
     decoding, no formula evaluation (the cached ``<v>`` is taken) —
     vendor landing files are value-only workbooks.
     """
@@ -210,6 +213,8 @@ def read_xlsx_rows(path: str, *, sheet: int = 0) -> list[list[str | None]]:
         part = target if target.startswith("xl/") else "xl/" + target.lstrip("/")
         rows: list[list[str | None]] = []
         for row in ET.fromstring(z.read(part)).iter(f"{_SSML}row"):
+            # a row left out of the XML is an empty row
+            rows.extend([] for _ in range(int(row.get("r", 0)) - 1 - len(rows)))
             vals: list[str | None] = []
             for c in row.findall(f"{_SSML}c"):
                 ci = _col_index(c.get("r", ""))
@@ -239,8 +244,10 @@ def read_excel_ingest(
     na_values: Sequence[str] = ("x",),
 ) -> DataFrame:
     """S2 — Excel landing read (01_source_me.R:93-97), the reference's
-    ``read_excel(skip=3, na="x")``: drop ``skip_rows`` leading rows,
-    take the next as the header, NULL the NA-sentinel cells, and type
+    ``read_excel(skip=3, na="x")``: drop ``skip_rows`` leading sheet
+    rows, take the first non-empty row after them as the header (as
+    ``readxl`` does, and as :func:`read_csv_skip` takes the first
+    non-blank line), NULL the NA-sentinel cells, and type
     the columns by :func:`_land` as the CSV path does. The cell texts
     (catalog-sized) enter the plan as one JSON literal, so no Python
     RDD backs the frame. A ``.csv`` path routes to :func:`read_csv_skip`.
@@ -250,14 +257,15 @@ def read_excel_ingest(
             spark, path, skip_rows=skip_rows, na_values=na_values
         )
     raw = read_xlsx_rows(path)[skip_rows:]
-    if not raw:
-        raise ValueError(f"{path!r}: no rows after skipping {skip_rows}")
-    names = _header_names(raw[0], na_values)
+    at = next((i for i, r in enumerate(raw) if any(r)), None)
+    if at is None:
+        raise ValueError(f"{path!r}: no header after skipping {skip_rows} rows")
+    names = _header_names(raw[at], na_values)
     width = len(names)
     na = set(na_values)
     body = [
         [None if v in na else v for v in (r + [None] * width)[:width]]
-        for r in raw[1:]
+        for r in raw[at + 1 :]
     ]
     rows = F.explode(F.from_json(F.lit(json.dumps(body)), "array<array<string>>"))
     strings = spark.range(1).select(rows.alias("r")).select(

@@ -368,6 +368,115 @@ def test_load_inputs_fires_at_most_three_jobs_per_input(spark, raw_dir):
     assert _jobs(spark, lambda: load_inputs(spark, raw_dir)) <= 3 * 4
 
 
+def test_load_inputs_equals_four_sequential_reads(spark, raw_dir):
+    """Landing the four inputs concurrently gives the same schemas and
+    row multisets as four reads one after another."""
+    from lmo_data_catalog_spark.sources.ingest import (
+        read_csv_skip,
+        read_excel_ingest,
+        resolve_input,
+    )
+
+    inp = load_inputs(spark, raw_dir)
+    one_by_one = {
+        "employment": read_csv_skip(
+            spark, f"{raw_dir}/employment.csv", skip_rows=3, remove_empty=True
+        ),
+        "job_openings": read_csv_skip(
+            spark, f"{raw_dir}/job_openings.csv", skip_rows=3, remove_empty=True
+        ),
+        "occ_char": read_excel_ingest(
+            spark,
+            resolve_input(raw_dir, "Occupational Characteristics*"),
+            skip_rows=3,
+            na_values=("x",),
+        ),
+        "clusters": read_csv_skip(spark, f"{raw_dir}/clusters.csv"),
+    }
+    for name, want in one_by_one.items():
+        got = getattr(inp, name)
+        assert got.schema == want.schema, name
+        assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+            map(tuple, want.collect()), key=repr
+        ), name
+
+
+def test_run_concurrently_gives_each_thread_its_own_local_properties(spark):
+    """Each thunk starts from its own clone of the caller's local
+    properties: what one thread sets is seen neither by the other
+    threads nor by the caller. Results come back in call order, and
+    the first failure in that order is raised after all have run."""
+    import threading
+
+    from lmo_data_catalog_spark.session import run_concurrently
+
+    sc = spark.sparkContext
+    key = "tests.run_concurrently"
+    meet = threading.Barrier(2, timeout=60)
+    ran = []
+
+    def thunk(name):
+        def run():
+            inherited = sc.getLocalProperty(key)
+            sc.setLocalProperty(key, name)
+            meet.wait()  # both threads have set their own value
+            ran.append(name)
+            return inherited, sc.getLocalProperty(key)
+
+        return run
+
+    sc.setLocalProperty(key, "caller")
+    try:
+        got = run_concurrently(spark, {"a": thunk("a"), "b": thunk("b")})
+        assert sc.getLocalProperty(key) == "caller"
+    finally:
+        sc.setLocalProperty(key, None)
+    assert got == {"a": ("caller", "a"), "b": ("caller", "b")}
+
+    def fail(msg):
+        def run():
+            ran.append(msg)
+            raise RuntimeError(msg)
+
+        return run
+
+    ran.clear()
+    calls = {"ok": lambda: 1, "first": fail("first"), "second": fail("second")}
+    with pytest.raises(RuntimeError, match="first"):
+        run_concurrently(spark, calls)
+    assert sorted(ran) == ["first", "second"]
+
+
+def test_read_excel_ingest_counts_rows_left_out_of_the_xml(spark, tmp_path):
+    """Excel leaves a blank row out of the sheet XML. Rows are numbered
+    by their r="N", so skip_rows counts sheet rows as readxl does: 2
+    banner rows and a blank third, then the header and one data row."""
+    from lmo_data_catalog_spark.sources.ingest import read_excel_ingest
+
+    full = tmp_path / "full.xlsx"
+    _write_minimal_xlsx(
+        full,
+        [["banner"], ["fiscal year 2024"], [None, None], ["NOC", "Openings"],
+         ["#11100", 120]],
+    )
+    xlsx = tmp_path / "gap.xlsx"
+    with zipfile.ZipFile(full) as src, zipfile.ZipFile(xlsx, "w") as dst:
+        for part in src.namelist():
+            data = src.read(part)
+            if part == "xl/worksheets/sheet1.xml":
+                assert b'<row r="3"></row>' in data
+                data = data.replace(b'<row r="3"></row>', b"")
+            dst.writestr(part, data)
+
+    rows = read_xlsx_rows(str(xlsx))
+    assert rows[2] == [] and rows[3] == ["NOC", "Openings"]
+    df = read_excel_ingest(spark, str(xlsx), skip_rows=3)
+    assert df.columns == ["NOC", "Openings"]
+    assert [tuple(r) for r in df.collect()] == [("#11100", 120)]
+    # the header is the first non-empty row at or after skip_rows
+    assert read_excel_ingest(spark, str(xlsx), skip_rows=2).columns == df.columns
+
+
 def test_read_csv_skip_raises_when_banner_overruns_split0(spark, tmp_path):
     """The banner and header are dropped by row id, which only split 0
     numbers from 0. A split 0 shorter than the banner must raise, not

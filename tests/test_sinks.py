@@ -418,3 +418,93 @@ def test_workbook_sheet_name_collision_and_xml_edges(spark, tmp_path):
     rows = read_xlsx_rows(out, sheet=2)  # parse proves valid XML
     assert rows[0] == ["bad", "ok"]
     assert rows[1] == [None, "3.5"]  # inf -> blank cell
+
+
+def test_xlsx_bytes_do_not_depend_on_the_clock(tmp_path, monkeypatch):
+    """Every zip part carries one fixed timestamp: the same frames
+    written at two different times give the same bytes."""
+    import time
+
+    import pandas as pd
+
+    from lmo_data_catalog_spark.sinks.workbook import _write_xlsx_stdlib
+
+    pdf = pd.DataFrame({"noc": ["#00011", "#11100"], "n": [3, 4], "r": [0.5, None]})
+    blobs = []
+    for i, now in enumerate((1_000_000_000.0, 1_700_000_000.0)):
+        monkeypatch.setattr(time, "time", lambda now=now: now)
+        path = str(tmp_path / f"t{i}.xlsx")
+        _write_xlsx_stdlib({"data": pdf}, path, pct_last3=True)
+        with open(path, "rb") as fh:
+            blobs.append(fh.read())
+    assert blobs[0] == blobs[1]
+
+
+def _csv_gzip_lines(out_dir):
+    (part,) = glob.glob(os.path.join(out_dir, "part-*.csv.gz"))
+    with gzip.open(part, "rt") as fh:
+        return fh.read().splitlines()
+
+
+def test_write_catalog_equals_sequential_writes(inputs, tmp_path):
+    """Writing the artifacts concurrently changes no output: every
+    workbook has the bytes of its own write_workbook call, and the gzip
+    CSV the lines of its own write_csv_gzip call, in order."""
+    arts = build_all(inputs, CFG)
+    meta = {name: m for name, (_, m) in ARTIFACTS.items()}
+    written = write_catalog(arts, str(tmp_path / "out"), metadata=meta)
+    assert list(written) == list(arts)
+    for name, path in written.items():
+        m = meta[name]
+        if m.get("format") == "csv_gzip":
+            (df,) = arts[name].values()
+            own = write_csv_gzip(df, str(tmp_path / name), single_file=True)
+            assert _csv_gzip_lines(path) == _csv_gzip_lines(own), name
+            continue
+        own = write_workbook(
+            arts[name], str(tmp_path / f"{name}.xlsx"),
+            pct_last3=m.get("pct_last3", False),
+        )
+        with open(path, "rb") as a, open(own, "rb") as b:
+            assert a.read() == b.read(), name
+
+
+def test_write_catalog_tags_every_job_with_the_callers_group(spark, inputs, tmp_path):
+    """Every Spark job the concurrent writers fire runs under the job
+    group the caller set, so a per-phase trace keeps its jobs."""
+    sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
+    arts = build_all(inputs, CFG)
+    meta = {name: m for name, (_, m) in ARTIFACTS.items()}
+    group = "tests|write_catalog|group"
+    sc.setJobGroup(group, "write_catalog")
+    try:
+        first = dag.nextJobId()
+        write_catalog(arts, str(tmp_path / "out"), metadata=meta)
+        end = dag.nextJobId()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert end > first
+    assert set(range(first, end)) <= set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_write_catalog_writes_every_other_artifact_before_raising(
+    spark, inputs, tmp_path
+):
+    """One failing artifact does not cut the others short: each is
+    written whole, then the failure is raised."""
+    boom = spark.range(1).select(F.raise_error(F.lit("boom in one artifact")))
+    arts = {"broken": {"data": boom}, **build_all(inputs, CFG)}
+    meta = {name: m for name, (_, m) in ARTIFACTS.items()}
+    out = tmp_path / "out"
+    with pytest.raises(Exception, match="boom in one artifact"):
+        write_catalog(arts, str(out), metadata=meta)
+    assert not (out / "broken.xlsx").exists()
+    for name in ARTIFACTS:
+        if meta[name].get("format") == "csv_gzip":
+            assert len(_csv_gzip_lines(str(out / name))) > 1, name
+            continue
+        wb = arts[name]
+        headers = [header for _, header, _ in _read_sheets(str(out / f"{name}.xlsx"))]
+        assert headers == [wb[sheet].columns for sheet in wb], name
