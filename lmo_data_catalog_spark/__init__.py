@@ -22,11 +22,11 @@ Layout
 
 __version__ = "0.1.0"
 
-# Semantics-free driver-latency patches (TCP_NODELAY on the py4j
-# gateway, JVM-function reflection memo) — see pyboundary.py for the
-# measured motivation. Applied at import so every session created
-# afterwards benefits; sessions created BEFORE import are retrofitted
-# per-builder via pyboundary.fix_live_connections() in Catalog.
+# Semantics-free driver-latency patch: memoize PySpark's JVM-function
+# reflection lookup, which cuts ``F.lit`` from 0.293 ms to 0.134 ms
+# (see pyboundary.py; its old TCP_NODELAY socket patch measured no
+# gain and was removed). Applied at import; the memo is consulted on
+# every ``F.*`` call, so sessions created before the import benefit too.
 from . import pyboundary as _pyboundary  # noqa: E402
 
 _pyboundary.apply()

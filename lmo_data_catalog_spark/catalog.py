@@ -29,7 +29,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from . import pyboundary
 
 TABLES = (
     "region",
@@ -63,10 +62,6 @@ class Catalog:
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = spark
         self.sf_dir = sf_dir.rstrip("/")
-        # retrofit TCP_NODELAY onto gateway connections created before
-        # the package import (e.g. the driver's own session) — cheap,
-        # idempotent, see pyboundary.py
-        pyboundary.fix_live_connections()
 
     def load(self, name: str) -> DataFrame:
         df = self._read(f"{self.sf_dir}/{name}.parquet")

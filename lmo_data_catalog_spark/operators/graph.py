@@ -452,7 +452,7 @@ def kcore(
     node-keyed exchange of the edge list, for power-law graphs whose
     hub would otherwise ride one task per level in both the window
     and the semi-join peel (both measured linear in hub degree —
-    tools/kcore_skew_probe.py): degrees come from a hash aggregate
+    SCALING.md §kcore hub-skew): degrees come from a hash aggregate
     whose map-side partial combine splits the hub count across input
     partitions, and survivors are filtered by anti-joining the edge
     list against the per-level DROPPED-node set — broadcast while it

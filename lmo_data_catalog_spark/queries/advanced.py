@@ -162,8 +162,8 @@ def cooccurrence_part_pairs_salted(
     across 8 tasks (each bucket holds 1/8 of the probe rows but sees
     the full replicated build rows for that order). Replication cost
     is bounded: the build side is 2 int columns, ×8. Task-histogram
-    flattening is measured by ``tools/skew_probe.py --basket``
-    (SCALING.md §skew)."""
+    flattening is measured in SCALING.md §skew (the basket
+    self-join rows)."""
     li = (
         Catalog(spark, sf_dir)
         .lineitem.select("l_orderkey", "l_partkey")
@@ -676,8 +676,8 @@ def salted_join_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: with a dimension this small Catalyst broadcasts and skew
     is moot; the salted plan is the one you deploy when the build
     side is too big to broadcast and one key exceeds a task even
-    after AQE skew-split. tools/skew_probe.py measures the actual
-    per-task flattening with broadcast disabled (SCALING.md)."""
+    after AQE skew-split. SCALING.md §skew records the actual
+    per-task flattening with broadcast disabled."""
     from ..operators.joins import salted_join
 
     li = Catalog(spark, sf_dir).lineitem.select(
@@ -942,7 +942,7 @@ def association_rules_topk_salted(
     (ask #7): a mega-order with M distinct items emits C(M,2) pairs
     from ONE orderkey task in the unsalted plan; hot-key salting
     spreads it over 8 tasks at plan time
-    (tools/itemset_skew_probe.py has the per-task histograms at an
+    (SCALING.md §itemset-miner skew has the per-task histograms at an
     8M-pair hot basket — the same mechanics
     cooccurrence_part_pairs_salted fixed, inherited here). HYBRID,
     not blanket: only keys whose basket exceeds 64 distinct items
@@ -1089,8 +1089,8 @@ def frequent_itemsets_depth3_salted(
     """``frequent_itemsets_depth3`` with BOTH chained orderkey
     self-joins routed through hybrid_salted_join x8 — the depth-3
     half of the r11 hot-basket ask: salting only the first join
-    re-collapses the hot key in the second (measured in
-    tools/itemset_skew_probe.py — a 384-part mega-order emits 9.4M
+    re-collapses the hot key in the second (measured in SCALING.md
+    §itemset-miner skew — a 384-part mega-order emits 9.4M
     triples, 83% on one task unsalted, ~21% salted both). Hybrid
     hot-only salting (threshold 64) keeps the TPC-H cost at the
     unsalted plan's level — no key is hot, so neither join

@@ -581,8 +581,8 @@ def _bpe_ctes(
     the Python kernel (_bpe_token_frames applies the mirror filter).
     Yields ``toks`` (doc_id, lang, w) and ``wlen`` (w, n_bpe);
     callers must open with WITH RECURSIVE. ``merges`` overrides the
-    committed table (tools/bpe_cost_probe.py sizes the oracle's cost
-    envelope against table-size slices)."""
+    committed table (the byte-level rows pass theirs; SCALING.md §BPE
+    cost envelope sizes the oracle's cost against table-size slices)."""
     if merges is None:
         from ..functions.bpe_merges import MERGES as merges
 

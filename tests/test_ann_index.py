@@ -299,7 +299,7 @@ def test_remove_ids_by_index_lookup_and_idempotence(
 
 def test_drift_raises_cell_occupancy_skew(spark, vectors, cell_sums):
     """The retrain policy's label-free trigger (r13 verdict ask #4,
-    measured in tools/pq_index_drift_probe.py): under the FROZEN cell
+    measured in SCALING.md §PQ-index drift): under the FROZEN cell
     model, a mean-shifted batch crowds into fewer cells, so the
     newest batch's max-cell occupancy share rises well before recall
     is measurable. Pins the signal's direction deterministically."""

@@ -1,7 +1,7 @@
 """AQE runtime skew-join evidence (SURVEY §7 E-e scale design).
 
 Complements the plan-time salting strategy (operators/joins.py::
-salted_join, probed in tools/skew_probe.py): at 100 TB the FIRST
+salted_join, measured in SCALING.md §skew): at 100 TB the FIRST
 line of defense against a hot join key is Spark's own adaptive
 skew-join split — no query rewrite, engaged at runtime from shuffle
 statistics. These tests pin the two facts a deployment relies on:

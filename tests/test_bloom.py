@@ -76,3 +76,40 @@ def test_contamination_bloom_refuses_short_probes(spark, monkeypatch):
     monkeypatch.setattr(pipeline, "PROBES", ["too short"])
     with pytest.raises(ValueError, match="3-word"):
         pipeline.contamination_screen_bloom(spark, "/root/testdata/sf0.001")
+
+
+def test_inverted_verify_matches_exact_scan_on_many_probes(spark, monkeypatch):
+    """Both screens against the ×|probes| exact scan on a probe set
+    far larger than the registry's three: 3-word windows of real
+    documents (shared interior words, true hits) plus phrases whose
+    interiors are absent from the corpus (the decontamination regime
+    the Bloom gate and the inverted verify exist for)."""
+    from lmo_data_catalog_spark.catalog import Catalog
+    from lmo_data_catalog_spark.queries import pipeline
+
+    sf = "/root/testdata/sf0.001"
+    docs = Catalog(spark, sf).documents.select("doc_id", "text")
+    probes = sorted(
+        {
+            " ".join(words[i : i + 3])
+            for (text,) in docs.orderBy("doc_id").select("text").take(8)
+            for words in [text.split()]
+            for i in range(0, min(24, len(words) - 2), 3)
+        }
+        | {f"qz{i} verylongmid{i} xj{i}" for i in range(64)}
+    )
+    arr = F.array(*[F.lit(p) for p in probes])
+    exact = {
+        tuple(r)
+        for r in docs.select("doc_id", F.explode(arr).alias("probe"), "text")
+        .filter(F.expr("position(probe IN text) > 0"))
+        .select("probe", "doc_id")
+        .collect()
+    }
+    monkeypatch.setattr(pipeline, "PROBES", probes)
+    bloom = {tuple(r) for r in pipeline.contamination_screen_bloom(spark, sf).collect()}
+    inverted = {
+        tuple(r) for r in pipeline.contamination_screen_inverted(spark, sf).collect()
+    }
+    assert len(probes) > 100 and len(exact) >= 8
+    assert bloom == inverted == exact

@@ -54,6 +54,23 @@ def test_bucketed_join_has_no_shuffle(spark, bucketed_tables):
 def test_bucketed_join_matches_unbucketed(spark, bucketed_tables):
     ta, tb = bucketed_tables
     cat = Catalog(spark, SF)
+
+    def cooccur(li):
+        # cooccurrence_part_pairs' self-join pair generation
+        basket = li.select("l_orderkey", "l_partkey").distinct()
+        a = basket.toDF("l_orderkey", "part_a")
+        b = basket.toDF("l_orderkey", "part_b")
+        return {
+            tuple(r)
+            for r in a.join(b, "l_orderkey")
+            .filter(F.col("part_a") < F.col("part_b"))
+            .groupBy("part_a", "part_b")
+            .agg(F.count(F.lit(1)).alias("n_orders"))
+            .collect()
+        }
+
+    pairs = cooccur(cat.lineitem)
+    assert pairs and cooccur(spark.table(tb)) == pairs
     want = (
         cat.orders.join(
             cat.lineitem, F.col("o_orderkey") == F.col("l_orderkey")

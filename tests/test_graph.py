@@ -61,6 +61,10 @@ def sym(pairs):
         [(1, 2), (2, 3), (1, 3)],  # triangle (regular: ranks stay 1.0)
         [(0, 1), (0, 2), (0, 3)],  # star (hub accumulates rank)
         [(1, 2), (2, 3), (3, 4), (4, 5)],  # chain
+        # two disjoint copies of a triangle with a tail: every node
+        # must carry its twin's rank (copy k == copy 0)
+        [(1, 2), (2, 3), (1, 3), (3, 4)]
+        + [(a + 10, b + 10) for a, b in [(1, 2), (2, 3), (1, 3), (3, 4)]],
     ],
 )
 def test_pagerank_matches_reference(spark, pairs):

@@ -1,10 +1,5 @@
-"""Shared helpers for the measurement probes (tools/*_probe.py).
-
-One definition each for the two things every probe used to copy:
-SCALING.md section maintenance and the noisy vector replication —
-so a tweak cannot silently diverge between probes that claim the
-"same scheme".
-"""
+"""Shared helper for the tools that record measurements in SCALING.md
+(``sf1_compare.py``): replace one ``## `` section in place."""
 
 from __future__ import annotations
 
@@ -31,37 +26,3 @@ def replace_section(title: str, body: str, *, path: str = SCALING) -> None:
     with open(path, "w") as fh:
         fh.write(text)
 
-
-def replicate_noisy(vecs, k: int, n_base: int):
-    """k replicas of an (vec_id, embedding) frame with per-(vec_id,
-    replica, element) sinusoidal noise at ~1 element-stddev amplitude:
-    deterministic, and decorrelates replicas from their originals AND
-    from each other, so near-dup pair output stays far below N² at
-    any replication."""
-    from pyspark.sql import functions as F
-
-    def _noisy(i):
-        def f(x, j):
-            return x + 0.12 * F.sin(
-                F.col("vec_id") * 0.618 + F.lit(i * 2.4) + j * 0.71
-            )
-
-        return f
-
-    parts = []
-    for i in range(k):
-        e = (
-            F.col("embedding")
-            if i == 0
-            else F.transform(F.col("embedding"), _noisy(i))
-        )
-        parts.append(
-            vecs.select(
-                (F.col("vec_id") + i * n_base).alias("vec_id"),
-                e.alias("embedding"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
