@@ -1,4 +1,4 @@
-"""Caching contract for shared intermediates.
+"""Caching contract for shared intermediates and iterative state.
 
 Several operators (MinHash/SimHash/winnowing dedup, IVF ANN)
 ``persist()`` an intermediate that two or more downstream branches of
@@ -8,52 +8,90 @@ intentional and stay pinned until the caller releases them: Spark has
 no "unpersist once my consumers are materialized" hook, and
 unpersisting eagerly would silently recompute.
 
-Contract: every operator-level persist goes through :func:`track`, and
+Contract: every operator-level persist goes through :func:`track`,
+every lineage-truncating checkpoint through :func:`checkpoint`, and
 long-lived sessions (notebooks, services) call :func:`release_all`
 between logical units of work. ``bench.py`` does this between queries.
 One-shot jobs can ignore it — executor caches die with the session.
 A scratch directory that a returned lazy frame still reads (a
 builder's on-disk index) goes through :func:`register_dir`, so the
 same :func:`release_all` removes it once the caller's action is done.
+Iterative operators run their rounds through :func:`converge`, which
+frees each superseded round as soon as nothing lazy reads it.
 """
 
 from __future__ import annotations
 
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
-#: STRONG references. r14 measurement fix: these were weakrefs, and a
-#: builder's tracked frames are CPython-refcounted away the moment the
-#: builder returns — so release_all() found only dead refs and freed
-#: NOTHING (measured: released=0 on every bench query). Because
-#: Spark's CacheManager keys entries by logical plan, the leak was
-#: worse than memory growth: a later identical invocation of the same
-#: query silently planned against the leaked InMemoryRelation, i.e.
-#: the bench's timed passes reused the warm-up pass's persisted
-#: intermediates instead of recomputing them. Strong refs make
-#: release_all() actually release; bench.py now releases between
-#: passes so every timed pass computes from the parquet inputs.
-_TRACKED: list[DataFrame] = []
+#: STRONG references, each with the call that frees its storage: with
+#: weakrefs (r14) a builder's frames died when it returned, release_all
+#: freed nothing, and later passes planned against the leaked
+#: InMemoryRelations instead of recomputing from the inputs.
+_HELD: list[tuple[DataFrame, Callable[[], object]]] = []
 _DIRS: list[str] = []
 
 
 def track(df: DataFrame) -> DataFrame:
     """Persist ``df`` and register it for :func:`release_all`."""
     df = df.persist()
-    _TRACKED.append(df)
+    _HELD.append((df, df.unpersist))
     return df
 
 
-def register(df: DataFrame) -> DataFrame:
-    """Register an ALREADY persisted/checkpointed frame for
-    :func:`release_all` without re-persisting it — for frames whose
-    storage the caller created some other way (``localCheckpoint``,
-    an explicit non-default storage level) that must still be
-    reclaimable between units of work (iterative operators' rank/
-    label vectors, see operators/graph.py)."""
-    _TRACKED.append(df)
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Lazily ``localCheckpoint`` ``df`` (lineage truncated; the first
+    action materializes it) and register it for :func:`release` and
+    :func:`release_all`. Its blocks belong to the checkpoint RDD, not
+    to the CacheManager, so ``DataFrame.unpersist()`` would leave them
+    until the JVM collects the RDD: releasing unpersists the RDD."""
+    df = df.localCheckpoint(eager=False)
+    rdd = df._jdf.queryExecution().analyzed().rdd()
+    _HELD.append((df, lambda: rdd.unpersist(False)))
     return df
+
+
+def release(df: DataFrame | None) -> None:
+    """Free ``df``'s storage now if it was registered by :func:`track`
+    or :func:`checkpoint`; a no-op for any other frame. Only call it
+    once nothing lazy still reads ``df``: a released checkpoint's
+    blocks are gone for good."""
+    for i, (held, free) in enumerate(_HELD):
+        if held is df:
+            del _HELD[i]
+            free()
+            return
+
+
+def converge(
+    first: DataFrame,
+    step: Callable[[DataFrame], tuple[DataFrame, bool]],
+    *,
+    max_rounds: int,
+    what: str,
+) -> tuple[DataFrame, int]:
+    """Drive an iterative operator from ``first`` to its fixpoint;
+    returns ``(frame, rounds)``. ``step(frame)`` returns ``(next,
+    done)`` and runs one Spark action over ``frame``, which
+    materializes it — so the round before ``frame`` backs nothing lazy
+    any more and is released. A ``next`` returned with ``done`` must be
+    materialized too; ``frame`` is then released unless returned
+    unchanged. Raises ``RuntimeError`` after ``max_rounds`` rounds
+    without ``done``: a truncated iteration never passes for the
+    fixpoint."""
+    prev, cur = None, first
+    for rounds in range(1, max_rounds + 1):
+        nxt, done = step(cur)
+        release(prev)
+        if done:
+            if nxt is not cur:
+                release(cur)
+            return nxt, rounds
+        prev, cur = cur, nxt
+    raise RuntimeError(f"{what} did not converge in {max_rounds} rounds")
 
 
 def register_dir(path: str) -> str:
@@ -64,19 +102,16 @@ def register_dir(path: str) -> str:
 
 
 def release_all() -> int:
-    """Unpersist every tracked DataFrame and delete every registered
-    directory; returns the number of frames released. Dropping the
-    strong refs afterwards also lets the JVM ContextCleaner reclaim
-    localCheckpoint RDD blocks (their storage is RDD-level, not
-    CacheManager-level, so unpersist alone does not free them)."""
+    """Free every tracked frame and checkpoint and delete every
+    registered directory; returns the number of frames released."""
     released = 0
-    for df in _TRACKED:
+    for _, free in _HELD:
         try:
-            df.unpersist()
+            free()
             released += 1
         except Exception:  # session already stopped — nothing to free
             pass
-    _TRACKED.clear()
+    _HELD.clear()
     for path in _DIRS:
         shutil.rmtree(path, ignore_errors=True)
     _DIRS.clear()

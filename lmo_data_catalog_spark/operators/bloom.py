@@ -15,8 +15,8 @@ Build side: the value set is hashed through a tiny local DataFrame
 longs on the driver, and inlined as a literal array — Spark ships it
 to every executor inside the serialized plan exactly like a broadcast
 variable, with zero shuffle. Driver/plan cost is O(m_bits/64) longs:
-a 1M-bit filter is 125 KB — fine; size ``m_bits ≈ 10×|values|`` for
-~1% FPP with k=3.
+a 1M-bit filter is 125 KB — fine; ``build_bloom_bitset`` sizes
+``m_bits ≈ 10×|values|`` (~2% FPP with k=3) unless told otherwise.
 
 At cluster scale the same probe expression works against a bitset of
 any origin; for probe sets too big to build driver-side, swap the
@@ -40,7 +40,7 @@ def build_bloom_bitset(
     spark: SparkSession,
     values: Iterable[str],
     *,
-    m_bits: int = 1024,
+    m_bits: int | None = None,
     k: int = 3,
 ) -> list[int]:
     """Hash ``values`` into an ``m_bits``-wide Bloom bitset.
@@ -48,10 +48,16 @@ def build_bloom_bitset(
     Returns the bitset as ``m_bits // 64`` signed 64-bit words (the
     representation ``bloom_might_contain`` consumes). Hashing runs
     through Spark's ``xxhash64`` so probe-side tests are bit-identical.
+    ``m_bits`` defaults to ~10 bits per distinct value (~2% FPP at
+    k=3), never below 1024 and rounded up to a multiple of 64: a fixed
+    width saturates as the value set grows (1024 values in 1024 bits
+    pass 86% of absent tokens).
     """
+    vals = list(dict.fromkeys(values))
+    if m_bits is None:
+        m_bits = max(1024, -(-10 * len(vals) // 64) * 64)
     if m_bits % 64:
         raise ValueError("m_bits must be a multiple of 64")
-    vals = list(dict.fromkeys(values))
     words = [0] * (m_bits // 64)
     if not vals:
         return words

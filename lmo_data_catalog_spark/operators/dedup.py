@@ -551,23 +551,25 @@ def connected_components(
     cliques (1-2 rounds either way); the shortcut is what makes
     adversarial long-path graphs — transitive chains of pairwise
     near-dups — converge (measured in SCALING.md §connected
-    components). ``localCheckpoint`` truncates lineage so plans don't
-    grow per round. Early-exits when a round changes nothing; RAISES
-    if ``max_iter`` rounds pass without convergence rather than
-    returning silently-wrong labels. ``stats``, if given, receives
+    components). ``cache.checkpoint`` truncates lineage so plans don't
+    grow per round, and ``cache.converge`` frees each superseded
+    round. Early-exits when a round changes nothing; RAISES if
+    ``max_iter`` rounds pass without convergence rather than
+    returning silently-wrong labels (rounds grow ~log2(diameter) with
+    ``shortcut=True``). ``stats``, if given, receives
     ``{"rounds": n}``.
     """
-    # localCheckpoint (eager) both materializes the pair computation
-    # ONCE and truncates the logical plan — without truncation every
-    # round re-ANALYZES the whole upstream MinHash lineage in Catalyst
-    # (driver-side planning grows per round and dominates: measured
-    # ~2 s/round on a 256-edge graph with persist() alone, which caches
-    # execution but keeps the full logical plan).
-    edges = (
+    # The checkpoint (materialized by the count) runs the pair
+    # computation ONCE and truncates the logical plan — without
+    # truncation every round re-ANALYZES the whole upstream MinHash
+    # lineage in Catalyst (driver-side planning grows per round and
+    # dominates: measured ~2 s/round on a 256-edge graph with
+    # persist() alone, which caches execution but keeps the full
+    # logical plan).
+    edges = cache.checkpoint(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
-        .localCheckpoint()
     )
     n_edges = edges.count()
     # Size the propagation partitioning from the MEASURED edge count:
@@ -578,21 +580,19 @@ def connected_components(
     parallelism = pairs.sparkSession.sparkContext.defaultParallelism
     n_parts = max(1, min(parallelism, n_edges // 500_000 + 1))
     if n_parts != edges.rdd.getNumPartitions():
-        edges = edges.repartition(n_parts, "dst").localCheckpoint()
+        edges = cache.checkpoint(edges.repartition(n_parts, "dst"))
     # propagate only over nodes that HAVE edges — singletons (the vast
     # majority of a deduped corpus) can't change label and rejoin at
-    # the end via coalesce.
-    labels = (
+    # the end via coalesce. The first round's count materializes this
+    # checkpoint and the repartitioned edges.
+    first = cache.checkpoint(
         edges.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("label", F.col("id"))
-        .localCheckpoint()
     )
-    label_type = labels.schema["label"].dataType
-    converged = False
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
+    label_type = first.schema["label"].dataType
+
+    def step(state: DataFrame) -> tuple[DataFrame, bool]:
         # one aggregation carries BOTH the propagated min-label and the
         # node's previous label (tagged rows), so the convergence count
         # is the same job that materializes the round — no separate
@@ -600,6 +600,7 @@ def connected_components(
         # the agg already hash-partitioned on the grouping key, so
         # EnsureRequirements inserts no further exchange: the round's
         # one shuffle has n_parts tasks.
+        labels = state.select("id", "label")
         own = labels.select("id", "label", F.col("label").alias("own"))
         prop = (
             edges.join(labels, edges.dst == labels.id)
@@ -634,22 +635,16 @@ def connected_components(
                     "own",
                 )
             )
-        # lazy checkpoint: the convergence count below is the first
-        # action and materializes it — one job per round instead of
-        # two (r14; same idiom as the graph.py loops)
-        rolled = rolled.localCheckpoint(eager=False)
+        # lazy checkpoint: the convergence count is the first action
+        # and materializes it — one job per round instead of two (r14)
+        rolled = cache.checkpoint(rolled)
         changed = rolled.filter(F.col("label") != F.col("own")).count()
-        labels = rolled.select("id", "label")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "— the graph has components of diameter beyond the round "
-            "budget; raise max_iter (rounds grow ~log2(diameter) with "
-            "shortcut=True)"
-        )
+        return rolled, changed == 0
+
+    state, rounds = cache.converge(
+        first, step, max_rounds=max_iter, what="connected_components"
+    )
+    labels = state.select("id", "label")
     if stats is not None:
         stats["rounds"] = rounds
     all_nodes = nodes.select(F.col(id_col).alias("id")).distinct()

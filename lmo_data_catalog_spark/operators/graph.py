@@ -13,9 +13,9 @@ differential (unusual for "iterative" algorithms).
 Scale shape per round: one join of the rank vector against the edge
 list (both keyed on node id — co-partitioned under bucketing) + one
 keyed aggregate. No driver-side state beyond the loop counter; the
-rank vector is never collected. For many rounds at 100 TB, checkpoint
-the rank vector every ~5 rounds like connected_components does to cut
-lineage growth.
+rank vector is never collected. The dangling-aware variants
+checkpoint the rank vector every round (``cache.checkpoint``) to cut
+lineage growth; the converging loops run through ``cache.converge``.
 """
 
 from __future__ import annotations
@@ -176,7 +176,6 @@ def pagerank_full(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 1,
     broadcast_ranks: bool = False,
 ) -> DataFrame:
     """Dangling-aware PageRank over an arbitrary directed edge list.
@@ -198,12 +197,11 @@ def pagerank_full(
     and Catalyst duplicates shared subtrees, so an untruncated
     logical plan doubles per round — at 3 rounds the formatted plan
     carried 256 Exchange nodes and analysis/planning dominated the
-    wall clock. ``checkpoint_every=1`` (r14 optimization: measured
-    9.0 s → 1.6 s best-of-3 at sf0.1, same values) lazily
-    localCheckpoint-s the vector EVERY round, truncating lineage so
+    wall clock. The vector is therefore lazily checkpointed EVERY
+    round (r14: 9.0 s → 1.6 s best-of-3 at sf0.1, same values):
     plan size stays linear and each round's vector is computed once;
-    the values are unchanged (identical arithmetic, identical
-    round structure — only the plan boundary moves).
+    the values are unchanged (identical arithmetic, identical round
+    structure — only the plan boundary moves).
 
     Scale shape per round: one keyed join + keyed aggregate (as
     :func:`pagerank`), plus a semi join against the (persisted)
@@ -216,13 +214,8 @@ def pagerank_full(
         ranks = _pr_round(
             ed, nodes, nn, dangling, ranks, damping, src, dst, b
         )
-        if i % checkpoint_every == 0 and i < n_iter:
-            # register, not bare persist: the checkpointed vector (and
-            # the persisted parent backing it) must be reclaimable by
-            # cache.release_all between registry/bench runs
-            ranks = cache.register(
-                cache.track(ranks).localCheckpoint(eager=False)
-            )
+        if i < n_iter:
+            ranks = cache.checkpoint(ranks)
     return ranks
 
 
@@ -234,43 +227,37 @@ def pagerank_converged(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 5,
 ) -> tuple[DataFrame, int]:
     """:func:`pagerank_full` iterated to an L1 fixed point: stop when
-    Σ|rₖ₊₁ − rₖ| < ``tol`` (or at ``max_iter``). Returns
-    ``(ranks, rounds_run)``.
+    Σ|rₖ₊₁ − rₖ| < ``tol``; raise if ``max_iter`` rounds do not get
+    there. Returns ``(ranks, rounds_run)``.
 
     Driver-side state is one scalar per round (the L1 delta — a 1-row
-    collect, which is also what forces evaluation, so each round runs
-    exactly once). The rank vector itself stays distributed and is
-    persisted per round with the previous round released;
-    ``localCheckpoint`` every ``checkpoint_every`` rounds truncates
-    lineage the way connected_components does, keeping plan size flat
-    no matter how slowly the chain mixes."""
+    collect, which is also what materializes the round's checkpointed
+    rank vector, so each round runs exactly once). The vector stays
+    distributed, and :func:`cache.converge` frees each superseded
+    round, so plan size and storage stay flat no matter how slowly
+    the chain mixes."""
     ed, nodes, nn, dangling = _pr_graph(edges, src, dst)
-    # every persisted/checkpointed rank vector is cache-registered so
-    # release_all reclaims the FINAL returned frame and any
-    # checkpointed intermediates (in-loop predecessors are also
-    # unpersisted eagerly below — double-release is a no-op)
-    ranks = cache.track(nodes.select("node", F.lit(1.0).alias("rank")))
-    rounds = 0
-    for rounds in range(1, max_iter + 1):
-        nxt = cache.track(
+
+    def step(ranks: DataFrame) -> tuple[DataFrame, bool]:
+        nxt = cache.checkpoint(
             _pr_round(ed, nodes, nn, dangling, ranks, damping, src, dst)
         )
-        if rounds % checkpoint_every == 0:
-            nxt = cache.register(nxt.localCheckpoint(eager=False))
         delta = (
             nxt.withColumnRenamed("rank", "__r1")
             .join(ranks.withColumnRenamed("rank", "__r0"), "node")
             .agg(F.sum(F.abs(F.col("__r1") - F.col("__r0"))).alias("d"))
             .collect()[0]["d"]
         )
-        ranks.unpersist()
-        ranks = nxt
-        if delta < tol:
-            break
-    return ranks, rounds
+        return nxt, delta < tol
+
+    return cache.converge(
+        nodes.select("node", F.lit(1.0).alias("rank")),
+        step,
+        max_rounds=max_iter,
+        what=f"pagerank_converged (tol={tol})",
+    )
 
 
 def triangle_counts(
@@ -436,16 +423,15 @@ def kcore(
     Raises if ``max_rounds`` rounds do not reach the fixpoint, so a
     silent truncation can never masquerade as the k-core.
 
-    Scale shape per round: one keyed degree aggregate + two semi
-    joins of the edge list against the surviving-node set (all keyed
-    on node id — co-partitioned under bucketing, AQE-splittable on
-    hub skew). The per-round convergence probe is a COUNT action
-    (1 long to the driver), the edge frame is persisted per round and
-    lineage-truncated every few rounds like pagerank_converged; no
-    node or edge set is ever collected. Cascade depth (#rounds) is
-    typically O(log n) for co-occurrence graphs; at 100 TB the known
-    alternative to fewer-round convergence is distributed bin peeling
-    — same join shape, coarser rounds.
+    Scale shape per peel level: two COUNT-over-window degrees on the
+    both-directions edge frame, partitioned by u and by v (keyed on
+    node id — co-partitioned under bucketing), and one filter; the
+    frame is read once per level. Three levels share one COUNT action
+    (1 long to the driver) and one lazy checkpoint, run through
+    ``cache.converge``; no node or edge set is ever collected. Cascade
+    depth (#levels) is typically O(log n) for co-occurrence graphs; at
+    100 TB the known alternative to fewer-round convergence is
+    distributed bin peeling — same shape, coarser levels.
 
     ``hub_safe=True`` (r10 verdict ask #5; SCALING §kcore-skew
     designed it, this ships it) selects the formulation with NO
@@ -487,9 +473,6 @@ def kcore(
             und, k=k, max_rounds=max_rounds,
             broadcast_drop_limit=broadcast_drop_limit,
         )
-    cur = cache.track(und)
-    n_edges = cur.count()
-
     # Window-based peel: deg(u) and deg(v) as COUNT over partition-by
     # windows on the SAME frame (both directions are present, so the
     # v-partition count IS v's degree). Crucially this references the
@@ -515,56 +498,46 @@ def kcore(
             .select("u", "v")
         )
 
-    def _core(frame: DataFrame) -> DataFrame:
-        return frame.groupBy(F.col("u").alias("node")).agg(
-            F.count(F.lit(1)).alias("core_degree")
-        )
-
     # THREE peel levels per materialize+count: peeling is monotone,
     # so equal counts across a triple round mean no level dropped a
     # node — the fixpoint. Cuts the checkpoint/count actions to
-    # ceil(live_rounds/3)+1 (r8 ran 2 levels/action; the extra level
-    # trades one lazy degree-agg+semi-join layer — cheap, the data
-    # shrinks per level — for a whole edge-list materialization);
-    # the engine still never exceeds max_rounds levels.
-    done = 0
-    while done < max_rounds:
-        levels = min(3, max_rounds - done)
-        nxt = cur
+    # ceil(live_rounds/3)+1 (r8 ran 2 levels/action); the engine still
+    # never exceeds max_rounds levels. Once the level budget is spent,
+    # ONE more round peels a single level: the last batch may have
+    # reached the fixpoint exactly AT the final allowed level (an
+    # earlier level dropped, the last was already converged — the
+    # batch count cannot tell), and an unchanged count PROVES it
+    # (monotonicity), so a converged graph never gets the spurious
+    # non-convergence error. The lazy checkpoint truncates lineage
+    # every round, so plans stay one round deep.
+    first = cache.track(und)
+    left, size = max_rounds, first.count()  # peel levels still allowed
+
+    def step(frame: DataFrame) -> tuple[DataFrame, bool]:
+        nonlocal left, size
+        levels = max(1, min(3, left))
+        left -= levels
+        nxt = frame
         for lvl in range(levels):
             nxt = _peel(nxt, flip=bool(lvl % 2))
-        # truncate lineage EVERY batch: each peel references its
-        # input twice (the two semi joins), so an un-truncated chain
-        # multiplies the logical plan per round — by ~round 12 merely
-        # STRINGIFYING the plan (persist's cache name, explain) OOMs
-        # the driver (the round-7 doubled-plan pitfall).
-        # localCheckpoint is lazy; the convergence count below
-        # materializes it.
-        nxt = cache.register(nxt.localCheckpoint(eager=False))
-        n_next = nxt.count()
-        done += levels
-        if n_next == n_edges:
-            return _core(cur)
-        # nxt is materialized (count above) — superseded round frames
-        # can release NOW, so a long session (or a suite building many
-        # plans) doesn't accumulate one persisted edge set per round
-        cur.unpersist()
-        cur, n_edges = nxt, n_next
-    # Round budget exhausted with the last batch still dropping edges
-    # — but the fixpoint may have been reached exactly AT the final
-    # allowed level (an earlier level in the batch dropped, the last
-    # was already converged; the batch-level count cannot tell).
-    # Probe with ONE extra peel: an unchanged count PROVES cur is the
-    # fixpoint (monotonicity), so a converged graph never gets the
-    # spurious non-convergence error.
-    probe = cache.register(_peel(cur).localCheckpoint(eager=False))
-    n_probe = probe.count()
-    probe.unpersist()
-    if n_probe == n_edges:
-        return _core(cur)
-    raise RuntimeError(
-        f"kcore did not converge in {max_rounds} rounds "
-        f"(still peeling at {n_edges} directed edges)"
+        nxt = cache.checkpoint(nxt)
+        n = nxt.count()
+        done, size = n == size, n
+        return nxt, done
+
+    core, _ = cache.converge(
+        first,
+        step,
+        max_rounds=-(-max_rounds // 3) + 1,
+        what=f"kcore ({max_rounds} peel levels, 3 per round)",
+    )
+    return _core(core)
+
+
+def _core(frame: DataFrame) -> DataFrame:
+    """Each surviving node with its degree in the core."""
+    return frame.groupBy(F.col("u").alias("node")).agg(
+        F.count(F.lit(1)).alias("core_degree")
     )
 
 
@@ -587,46 +560,39 @@ def _kcore_hub_safe(
     otherwise (level 1 on a sparse graph can drop a large fraction
     of all nodes; later levels are small by monotonicity). The edge
     frame itself is never hash-partitioned by node in any stage."""
-    cur = cache.track(und)
     prev_dropped = None
-    rounds = 0
-    while True:
+
+    def step(cur: DataFrame) -> tuple[DataFrame, bool]:
+        nonlocal prev_dropped
         deg = cur.groupBy("u").agg(F.count(F.lit(1)).alias("__d"))
-        dropped = cache.register(
-            deg.filter(F.col("__d") < k)
-            .select(F.col("u").alias("__dropped"))
-            .localCheckpoint(eager=False)
+        dropped = cache.checkpoint(
+            deg.filter(F.col("__d") < k).select(F.col("u").alias("__dropped"))
         )
-        # this count ALSO materializes cur's pending localCheckpoint
-        # (first action over it), after which the previous level's
-        # dropped set is no longer referenced by anything lazy
+        # this count ALSO materializes cur, the only lazy reader of the
+        # previous level's dropped set
         n_drop = dropped.count()
-        if prev_dropped is not None:
-            prev_dropped.unpersist()
+        cache.release(prev_dropped)
+        prev_dropped = dropped
         if n_drop == 0:
-            dropped.unpersist()
-            return cur.groupBy(F.col("u").alias("node")).agg(
-                F.count(F.lit(1)).alias("core_degree")
-            )
-        if rounds >= max_rounds:
-            dropped.unpersist()
-            raise RuntimeError(
-                f"kcore did not converge in {max_rounds} rounds "
-                f"(hub_safe; still dropping {n_drop} nodes)"
-            )
+            return cur, True
         right = (
             F.broadcast(dropped)
             if n_drop <= broadcast_drop_limit
             else dropped
         )
-        nxt = (
-            cur.join(right, F.col("u") == F.col("__dropped"), "left_anti")
-            .join(right, F.col("v") == F.col("__dropped"), "left_anti")
-        )
         # each level references cur twice (the anti-join pair), so
         # truncate lineage per level like the window peel does
-        nxt = cache.register(nxt.localCheckpoint(eager=False))
-        rounds += 1
-        cur.unpersist()
-        cur = nxt
-        prev_dropped = dropped
+        return cache.checkpoint(
+            cur.join(right, F.col("u") == F.col("__dropped"), "left_anti")
+            .join(right, F.col("v") == F.col("__dropped"), "left_anti")
+        ), False
+
+    # max_rounds anti-join levels, then one more count must find
+    # nothing to drop
+    core, _ = cache.converge(
+        cache.track(und),
+        step,
+        max_rounds=max_rounds + 1,
+        what=f"kcore (hub_safe, {max_rounds} peel levels)",
+    )
+    return _core(core)

@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import cache
+
 
 def _fold_sum(products: Column) -> Column:
     """Left-to-right double-precision fold — the same addition order as
@@ -430,8 +432,6 @@ def kmeans_cells_exact(
     1-based cell-id order) — the unnormalized centroid each row was
     assigned to, which consumers like prototype pruning score against.
     """
-    from .. import cache
-
     q = cache.track(
         df.select(
             F.col(id_col),
@@ -654,11 +654,12 @@ def neardup_pairs_gemm(
     are unioned. Every (a, b) pair lands in exactly one block — the
     one holding b — so the union is a partition of the unsharded
     candidate set: byte-identical output, bounded driver/executor
-    memory. Each block's candidates are eagerly materialized
-    (``localCheckpoint``) before the next block's matrix is broadcast,
-    so peak executor footprint is ONE block matrix regardless of
-    block count; on a real cluster swap localCheckpoint for a
-    checkpoint dir or a parquet spill of the (tiny) candidate ids.
+    memory. Each block's candidates are checkpointed
+    (``cache.checkpoint``) and materialized by one noop-sink write
+    before the next block's matrix is broadcast, so peak executor
+    footprint is ONE block matrix regardless of block count; on a real
+    cluster swap the local checkpoint for a checkpoint dir or a
+    parquet spill of the (tiny) candidate ids.
 
     ``same_col`` (optional) restricts pairs to rows AGREEING on that
     column (e.g. a k-means cell id): the equality test rides the
@@ -766,7 +767,9 @@ def neardup_pairs_gemm(
             if cand_b is not None:
                 # materialize NOW so this block's broadcast matrix can
                 # leave executor memory before the next one arrives
-                parts.append(cand_b.localCheckpoint(eager=True))
+                part = cache.checkpoint(cand_b)
+                part.write.format("noop").mode("overwrite").save()
+                parts.append(part)
         if not parts:
             return (
                 df.select(

@@ -1299,7 +1299,7 @@ def contamination_screen_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # document token is exactly "b" — hashing w.lower() keeps the
     # no-false-negative guarantee for mixed-case probes too.
     interiors = sorted({w.lower() for p in PROBES for w in p.split()[1:-1]})
-    bitset = build_bloom_bitset(spark, interiors, m_bits=1024, k=3)
+    bitset = build_bloom_bitset(spark, interiors, k=3)
     cat = Catalog(spark, sf_dir)
     candidates = cat.documents.where(
         F.exists(
@@ -1353,7 +1353,7 @@ def contamination_screen_inverted(
             "contamination_screen for short phrases"
         )
     interiors = sorted({w.lower() for p in PROBES for w in p.split()[1:-1]})
-    bitset = build_bloom_bitset(spark, interiors, m_bits=1024, k=3)
+    bitset = build_bloom_bitset(spark, interiors, k=3)
     cat = Catalog(spark, sf_dir)
     candidates = cat.documents.where(
         F.exists(

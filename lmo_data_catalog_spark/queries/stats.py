@@ -1062,16 +1062,15 @@ def kcore_parts_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly stronger than a raw degree filter (peeling cascades:
     dropping one node can demote its neighbors below k).
 
-    Engine side is operators/graph.py::kcore — a converging loop of
-    one keyed degree aggregate + two semi joins per round,
-    lineage-truncated every round (the plan references the previous
-    frame twice — un-truncated it doubles per round), with a 1-long
-    COUNT action
-    as the convergence probe; raises past max_rounds rather than
-    silently truncating. The oracle unrolls the same peeling as a
-    fixed 12-round materialized CTE chain — monotonicity makes the
-    fixed chain and the early-stopping loop agree exactly (4–6 live
-    rounds at these scales). Output is exact integers (node id,
+    Engine side is operators/graph.py::kcore — a window peel (two
+    COUNT-over-window degrees + one filter per level, one read of the
+    frame) run through cache.converge: three levels per lazily
+    checkpointed round, with a 1-long COUNT action as the convergence
+    probe; raises past max_rounds rather than silently truncating.
+    The oracle unrolls the same peeling as a fixed 12-round
+    materialized CTE chain — monotonicity makes the fixed chain and
+    the early-stopping loop agree exactly (4–6 live levels at these
+    scales). Output is exact integers (node id,
     within-core degree): no float surface at all."""
     from ..operators.graph import kcore
     from ..operators.joins import basket_pairs

@@ -16,6 +16,8 @@ from lmo_data_catalog_spark.operators.bloom import (
     build_bloom_bitset,
 )
 
+from .conftest import SF_SMOKE
+
 
 @pytest.fixture(scope="module")
 def inserted():
@@ -113,3 +115,30 @@ def test_inverted_verify_matches_exact_scan_on_many_probes(spark, monkeypatch):
     }
     assert len(probes) > 100 and len(exact) >= 8
     assert bloom == inverted == exact
+
+
+@pytest.mark.parametrize(
+    "builder", ["contamination_screen_bloom", "contamination_screen_inverted"]
+)
+def test_screen_gate_stays_selective_at_1024_interiors(spark, monkeypatch, builder):
+    """The screens size their bitset from the interior-word count: with
+    1,024 distinct interiors the gate must still reject ≥ 95% of absent
+    tokens (a fixed 1,024-bit set passes ~86% of them)."""
+    from lmo_data_catalog_spark.operators import bloom
+    from lmo_data_catalog_spark.queries import pipeline
+
+    built = []
+
+    def capture(*args, **kwargs):
+        built.append(build_bloom_bitset(*args, **kwargs))
+        return built[-1]
+
+    monkeypatch.setattr(bloom, "build_bloom_bitset", capture)
+    monkeypatch.setattr(
+        pipeline, "PROBES", [f"a{i} mid{i} z{i}" for i in range(1024)]
+    )
+    getattr(pipeline, builder)(spark, SF_SMOKE)
+    (bitset,) = built
+    absent = spark.createDataFrame([(f"absent-{i}",) for i in range(2000)], "t string")
+    fp = absent.where(bloom_might_contain("t", bitset, k=3)).count()
+    assert fp / 2000 <= 0.05

@@ -195,10 +195,15 @@ def test_pagerank_converged_reaches_fixed_point(spark):
 
 def test_pagerank_converged_equals_fixed_round_run(spark):
     """Convergence mode is the SAME per-round function as
-    pagerank_full: after k rounds the vectors must agree exactly."""
+    pagerank_full: after k rounds the vectors must agree exactly. The
+    L1 delta first drops below 1e-6 at round 14, so a 3-round budget
+    must raise rather than return the unconverged vector."""
     edges = [("a", "b"), ("b", "c"), ("a", "c")]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    ranks, rounds = pagerank_converged(df, tol=1e-6, max_iter=12)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        pagerank_converged(df, tol=1e-6, max_iter=3)
+    ranks, rounds = pagerank_converged(df, tol=1e-6, max_iter=20)
+    assert rounds == 14
     fixed = {
         r["node"]: r["rank"]
         for r in pagerank_full(df, n_iter=rounds).collect()
@@ -303,6 +308,26 @@ def test_kcore_is_fixpoint_and_raises_without_convergence(spark):
     )
     with _pytest.raises(RuntimeError, match="did not converge"):
         kcore(path, k=2, max_rounds=1)
+
+
+def test_kcore_window_peel_build_jobs(spark):
+    """Plan budget: while it builds, the window peel runs only the
+    edge count and one checkpointed count per round of up to three
+    levels. A 20-node path at k=2 peels its two endpoints per level
+    (10 live levels); the build fired 26 Spark jobs when the count was
+    pinned, and lower is fine."""
+    from lmo_data_catalog_spark import cache
+    from lmo_data_catalog_spark.operators.graph import kcore
+
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 20)], ["src", "dst"]
+    )
+    cache.release_all()  # no cached frame from an earlier test
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    core = kcore(path, k=2)
+    assert dag.nextJobId() - before <= 26
+    assert core.count() == 0
 
 
 def test_kcore_canonicalize_handles_dirty_edges(spark):

@@ -87,6 +87,22 @@ def test_exchange_count_within_budget(spark, name):
     )
 
 
+@pytest.mark.parametrize(
+    "name", ["pagerank_part_cooccurrence", "pagerank_dangling_part_supplier"]
+)
+def test_pagerank_plans_no_sort_merge_join(spark, name):
+    """``broadcast_ranks=True`` keeps every O(nodes) frame on the
+    broadcast side, so no round sort-merge-joins the edge list (9 and 7
+    BroadcastHashJoins when pinned). Counts SortMergeJoin nodes only:
+    these plans hold cache.track'ed subtrees, so their textual Exchange
+    count depends on cache state (see minhash_lsh_pairs above)."""
+    df = REGISTRY[name].builder(spark, SF)
+    df.write.format("noop").mode("overwrite").save()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    assert plan.count("SortMergeJoin") == 0
+
+
 # ------------------------------------------------- codegen 64 KB cliff
 
 #: queries whose plans are giant-literal fold chains — the family

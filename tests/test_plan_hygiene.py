@@ -107,8 +107,8 @@ def plans(spark):
     for name, spec in REGISTRY.items():
         df = spec.builder(spark, SF)
         out[name] = df._jdf.queryExecution().executedPlan().toString()
-    # iterative builders (kcore, pagerank_converged) EXECUTE and
-    # persist while building; release them so a full-suite session
+    # iterative builders (kcore, connected components) EXECUTE and
+    # checkpoint while building; release them so a full-suite session
     # doesn't carry this module's storage into later tests (or OOM
     # when this module runs late in the suite)
     cache.release_all()
