@@ -18,6 +18,11 @@ builder's on-disk index) goes through :func:`register_dir`, so the
 same :func:`release_all` removes it once the caller's action is done.
 Iterative operators run their rounds through :func:`converge`, which
 frees each superseded round as soon as nothing lazy reads it.
+
+A builder that needs a checkpoint's row count right away calls
+:func:`materialize`, which checkpoints and counts the checkpoint's own
+RDD. That count adds no aggregate and no exchange; ``DataFrame.count()``
+on the checkpoint plans both, and AQE runs them as a job of their own.
 """
 
 from __future__ import annotations
@@ -48,10 +53,24 @@ def checkpoint(df: DataFrame) -> DataFrame:
     :func:`release_all`. Its blocks belong to the checkpoint RDD, not
     to the CacheManager, so ``DataFrame.unpersist()`` would leave them
     until the JVM collects the RDD: releasing unpersists the RDD."""
+    return _checkpoint(df)[0]
+
+
+def materialize(df: DataFrame) -> tuple[DataFrame, int]:
+    """:func:`checkpoint` ``df`` and materialize it now; returns
+    ``(frame, rows)``. The count runs on the checkpoint RDD itself, so
+    the job that computes and stores its blocks also counts them: a
+    map-only frame takes 1 Spark job, where a checkpoint followed by
+    ``DataFrame.count()`` takes 2."""
+    df, rdd = _checkpoint(df)
+    return df, rdd.count()
+
+
+def _checkpoint(df: DataFrame) -> tuple[DataFrame, object]:
     df = df.localCheckpoint(eager=False)
     rdd = df._jdf.queryExecution().analyzed().rdd()
     _HELD.append((df, lambda: rdd.unpersist(False)))
-    return df
+    return df, rdd
 
 
 def release(df: DataFrame | None) -> None:

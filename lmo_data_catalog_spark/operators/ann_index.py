@@ -44,6 +44,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..pyboundary import literal_array
+
 #: number of PQ codes per vector == PQ_M of the committed codebook;
 #: imported lazily in the kernel so module import stays Spark-free.
 CODES_SCHEMA = "id long, cell int, codes array<int>"
@@ -165,7 +167,7 @@ class PqIvfIndexState:
         the streaming sink). O(batch) compute, zero shuffle (the
         partitioned write splits by column value, not by Exchange),
         zero history reads. Ids must be unique across batches."""
-        if df.limit(1).count() == 0:
+        if df.isEmpty():
             return self.table.head()
         return self.table.commit(
             self._encode(df, id_col=id_col, vec_col=vec_col),
@@ -279,7 +281,7 @@ class PqIvfIndexState:
         an empty index is a deployment error, not a state."""
         if cell_sums is not None:
             self.cell_sums = [[int(x) for x in v] for v in cell_sums]
-        if vectors.limit(1).count() == 0:
+        if vectors.isEmpty():
             raise ValueError("rebuild needs a non-empty vector corpus")
         return self.table.commit(
             self._encode(vectors, id_col=id_col, vec_col=vec_col),
@@ -340,10 +342,13 @@ class PqIvfIndexState:
                 lut.append(acc)
             luts.append(lut)
         codes = self.table.read_partitions("cell", probed)
+        # one literal per subspace, not one 16×256 literal: the
+        # optimizer folds each element_at(table[j]) on its own and
+        # would parse the whole table once per j (~0.04 s more to plan)
         adc = None
         for j in range(PQ_M):
-            arr = F.array(*[F.lit(v) for v in luts[j]])
-            term = F.element_at(arr, F.col("codes")[j] + 1)
+            lut = literal_array(luts[j], "array<double>")
+            term = F.element_at(lut, F.col("codes")[j] + 1)
             adc = term if adc is None else adc + term
         return (
             codes.select("id", adc.alias("__adc"))

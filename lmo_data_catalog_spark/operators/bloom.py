@@ -35,6 +35,8 @@ from collections.abc import Iterable, Sequence
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
+from ..pyboundary import literal_array
+
 
 def build_bloom_bitset(
     spark: SparkSession,
@@ -95,7 +97,7 @@ def bloom_might_contain(
     """
     c = F.col(col) if isinstance(col, str) else col
     m_bits = len(bitset_words) * 64
-    arr = F.array(*[F.lit(int(w)).cast("long") for w in bitset_words])
+    arr = literal_array([int(w) for w in bitset_words], "array<bigint>")
     cond = None
     for i in range(k):
         pos = F.pmod(F.xxhash64(c, F.lit(i)), F.lit(m_bits))

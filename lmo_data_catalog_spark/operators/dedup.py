@@ -566,12 +566,11 @@ def connected_components(
     # dominates: measured ~2 s/round on a 256-edge graph with
     # persist() alone, which caches execution but keeps the full
     # logical plan).
-    edges = cache.checkpoint(
+    edges, n_edges = cache.materialize(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
     )
-    n_edges = edges.count()
     # Size the propagation partitioning from the MEASURED edge count:
     # AQE can't coalesce across checkpoint boundaries, so a tiny graph
     # would otherwise pay spark.sql.shuffle.partitions-task shuffles

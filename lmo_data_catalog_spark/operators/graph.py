@@ -426,12 +426,14 @@ def kcore(
     Scale shape per peel level: two COUNT-over-window degrees on the
     both-directions edge frame, partitioned by u and by v (keyed on
     node id — co-partitioned under bucketing), and one filter; the
-    frame is read once per level. Three levels share one COUNT action
-    (1 long to the driver) and one lazy checkpoint, run through
-    ``cache.converge``; no node or edge set is ever collected. Cascade
-    depth (#levels) is typically O(log n) for co-occurrence graphs; at
-    100 TB the known alternative to fewer-round convergence is
-    distributed bin peeling — same shape, coarser levels.
+    frame is read once per level. Three levels share one checkpoint,
+    counted on its own RDD as it is stored (``cache.materialize``: 1
+    long to the driver), run through ``cache.converge``; round 1 reads
+    the input itself, and no node or edge set is ever collected or
+    counted outside a round. Cascade depth (#levels) is typically
+    O(log n) for co-occurrence graphs; at 100 TB the known alternative
+    to fewer-round convergence is distributed bin peeling — same
+    shape, coarser levels.
 
     ``hub_safe=True`` (r10 verdict ask #5; SCALING §kcore-skew
     designed it, this ships it) selects the formulation with NO
@@ -508,10 +510,12 @@ def kcore(
     # earlier level dropped, the last was already converged — the
     # batch count cannot tell), and an unchanged count PROVES it
     # (monotonicity), so a converged graph never gets the spurious
-    # non-convergence error. The lazy checkpoint truncates lineage
-    # every round, so plans stay one round deep.
-    first = cache.track(und)
-    left, size = max_rounds, first.count()  # peel levels still allowed
+    # non-convergence error. The checkpoint truncates lineage every
+    # round, so plans stay one round deep. Round 1 reads ``und``
+    # itself and has no earlier count to compare with, so it never
+    # stops the loop: an input already at its core pays one more
+    # round instead of a persist and a count of the whole edge frame.
+    left, size = max_rounds, None  # peel levels still allowed
 
     def step(frame: DataFrame) -> tuple[DataFrame, bool]:
         nonlocal left, size
@@ -520,13 +524,12 @@ def kcore(
         nxt = frame
         for lvl in range(levels):
             nxt = _peel(nxt, flip=bool(lvl % 2))
-        nxt = cache.checkpoint(nxt)
-        n = nxt.count()
+        nxt, n = cache.materialize(nxt)
         done, size = n == size, n
         return nxt, done
 
     core, _ = cache.converge(
-        first,
+        und,
         step,
         max_rounds=-(-max_rounds // 3) + 1,
         what=f"kcore ({max_rounds} peel levels, 3 per round)",
@@ -565,12 +568,11 @@ def _kcore_hub_safe(
     def step(cur: DataFrame) -> tuple[DataFrame, bool]:
         nonlocal prev_dropped
         deg = cur.groupBy("u").agg(F.count(F.lit(1)).alias("__d"))
-        dropped = cache.checkpoint(
-            deg.filter(F.col("__d") < k).select(F.col("u").alias("__dropped"))
-        )
         # this count ALSO materializes cur, the only lazy reader of the
         # previous level's dropped set
-        n_drop = dropped.count()
+        dropped, n_drop = cache.materialize(
+            deg.filter(F.col("__d") < k).select(F.col("u").alias("__dropped"))
+        )
         cache.release(prev_dropped)
         prev_dropped = dropped
         if n_drop == 0:

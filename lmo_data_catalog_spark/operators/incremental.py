@@ -349,9 +349,9 @@ def update_incremental_join(
     dv = join_view_delta(
         live_a, live_b, _pruned(a_state, b_bounds), _pruned(b_state, a_bounds), on=on
     )
-    if delta_a is not None and delta_a.limit(1).count() > 0:
+    if delta_a is not None and not delta_a.isEmpty():
         a_state.commit(delta_a, stats_col=on, operation=operation)
-    if delta_b is not None and delta_b.limit(1).count() > 0:
+    if delta_b is not None and not delta_b.isEmpty():
         b_state.commit(delta_b, stats_col=on, operation=operation)
     if dv is None:
         return None

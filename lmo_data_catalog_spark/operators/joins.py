@@ -21,6 +21,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..pyboundary import literal_array
+
 
 def natural_join(
     left: DataFrame,
@@ -184,7 +186,7 @@ def salted_join(
     l_salted = left.withColumn("__salt", salt)
     r_salted = right.withColumn(
         "__salt",
-        F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)])),
+        F.explode(literal_array(list(range(salt_buckets)), "array<int>")),
     )
     return l_salted.join(
         r_salted, on=[*on, "__salt"], how=how
@@ -263,8 +265,8 @@ def hybrid_salted_join(
             F.explode(
                 F.when(
                     F.col("__is_hot"),
-                    F.array(*[F.lit(i) for i in range(salt_buckets)]),
-                ).otherwise(F.array(F.lit(0)))
+                    literal_array(list(range(salt_buckets)), "array<int>"),
+                ).otherwise(literal_array([0], "array<int>"))
             ),
         )
         .drop("__is_hot")

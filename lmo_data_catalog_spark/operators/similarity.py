@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import cache
+from ..pyboundary import literal_array
 
 
 def _fold_sum(products: Column) -> Column:
@@ -38,7 +39,7 @@ def _fold_sum(products: Column) -> Column:
 
 def dot_literal(col: str, vec: list[float]) -> Column:
     """Left-deep ⟨array_col, literal_vec⟩ in double precision."""
-    lit_vec = F.array(*[F.lit(float(v)) for v in vec])
+    lit_vec = literal_array([float(v) for v in vec], "array<double>")
     return _fold_sum(
         F.zip_with(F.col(col), lit_vec, lambda x, v: x.cast("double") * v)
     )

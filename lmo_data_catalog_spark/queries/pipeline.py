@@ -24,6 +24,7 @@ from ..operators.similarity import (
     norm_sq,
 )
 from ..operators.windows import global_row_number, global_running_sum
+from ..pyboundary import literal_array
 from ..registry import query
 from .llm import _SHINGLES_SQL, DIM, _sql_cosine, _sql_dot
 
@@ -1245,7 +1246,7 @@ def contamination_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same oracle), which Bloom-prefilters documents before the
     ×|probes| exact scan."""
     cat = Catalog(spark, sf_dir)
-    probes = F.array(*[F.lit(p) for p in PROBES])
+    probes = literal_array(PROBES, "array<string>")
     return (
         cat.documents.select(
             "doc_id", F.explode(probes).alias("probe"), "text"
@@ -1307,7 +1308,7 @@ def contamination_screen_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda t: bloom_might_contain(t, bitset, k=3),
         )
     )
-    probes = F.array(*[F.lit(p) for p in PROBES])
+    probes = literal_array(PROBES, "array<string>")
     return (
         candidates.select(
             "doc_id", F.explode(probes).alias("probe"), "text"
@@ -4609,10 +4610,13 @@ def pq_index_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     full train + ingest cost, like every other trained row.
 
     One ingest, not the two batches an earlier version took: both
-    give the same rows, and the builder's median fell from 3.84 s to
-    3.17 s (sf0.003, seed 1, 8 interleaved reps, 4 cores). The
-    incremental path production takes (union of batches == one-shot
-    build) is covered by
+    give the same rows. The query LUT rides the plan as one literal
+    per subspace and the ingest's emptiness probe is one job; with
+    them a warm build takes 1.4–1.6 s and ~950 py4j calls, where one
+    ``F.lit`` per LUT entry took 2.6–2.8 s and 9,300–11,700 (perfbench
+    registry traced run, sf0.003, seed 1, 4 cores). The incremental
+    path production takes (union of batches == one-shot build) is
+    covered by
     tests/test_ann_index.py::test_union_of_batches_equals_one_shot."""
     import tempfile
 

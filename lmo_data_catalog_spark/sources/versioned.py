@@ -977,7 +977,7 @@ class VersionedTable:
         if not svals:
             if (
                 replacement is not None
-                and replacement.limit(1).count() > 0
+                and not replacement.isEmpty()
             ):
                 raise ValueError(
                     "replacement rows supplied but no values to "
@@ -1052,7 +1052,7 @@ class VersionedTable:
         new_stats = {d: stats[d] for d in keep_dirs if d in stats}
         new_part = {d: part[d] for d in keep_dirs if d in part}
         new_schema = schema
-        if replacement is not None and replacement.limit(1).count() > 0:
+        if replacement is not None and not replacement.isEmpty():
             cdir = f"c{version:05d}-{uuid.uuid4().hex[:8]}"
             path = os.path.join(self._data_dir, cdir)
             replacement.write.partitionBy(col).parquet(path)

@@ -522,7 +522,7 @@ def cdc_upsert_sink(
         table = VersionedTable(df.sparkSession, table_root)
         if batch_id <= watermark(table):
             return
-        if df.limit(1).count() == 0:
+        if df.isEmpty():
             # empty micro-batch: merging it would find no touched keys
             # and conservatively rewrite EVERY directory — skip (a
             # replay of an empty batch is equally a no-op)
@@ -570,7 +570,7 @@ def cdc_upsert_sink(
             if state_keep_last is not None:
                 table.vacuum(keep_last=state_keep_last)
             return
-        has_deletes = deletes is not None and deletes.limit(1).count() > 0
+        has_deletes = deletes is not None and not deletes.isEmpty()
         table.merge(
             updates,
             key,
@@ -658,7 +658,7 @@ def lsh_dedup_sink(
         wm = int(state.table.get_props().get("stream_watermark", -1))
         if batch_id <= wm:
             return
-        if df.limit(1).count() == 0:
+        if df.isEmpty():
             return
         cand, batch_bands = state.probe(df, id_col=id_col, text_col=text_col)
         cand.write.mode("overwrite").parquet(
@@ -733,7 +733,7 @@ def pq_index_sink(
         wm = int(state.table.get_props().get("stream_watermark", -1))
         if batch_id <= wm:
             return
-        if df.limit(1).count() == 0:
+        if df.isEmpty():
             return
         state.ingest(
             df,

@@ -369,3 +369,52 @@ def test_rebuild_swaps_cells_and_equals_fresh_build(
     ).count()
     with pytest.raises(ValueError, match="non-empty"):
         state.rebuild(vectors.filter(F.col("vec_id") < 0))
+
+
+def _shortlist_inputs(spark, vectors, cell_sums, path):
+    state = PqIvfIndexState(spark, path, cell_sums)
+    state.ingest(vectors)
+    qvec = [
+        float(x)
+        for x in vectors.filter(F.col("vec_id") == 0)
+        .collect()[0]["embedding"]
+    ]
+    return state, qvec
+
+
+def test_adc_shortlist_py4j_budget(spark, vectors, cell_sums, tmp_path, monkeypatch):
+    """The 16×256 query LUT rides the plan as one literal per row:
+    building the shortlist costs a few hundred py4j round trips (182
+    when pinned), not the 8,390 of one ``F.lit`` per LUT entry."""
+    from .test_pyboundary import _count_round_trips
+
+    state, qvec = _shortlist_inputs(spark, vectors, cell_sums, str(tmp_path / "ix"))
+    state.adc_shortlist(qvec)  # warm-up: resolve the F.* functions once
+    sent = _count_round_trips(monkeypatch, lambda: state.adc_shortlist(qvec))
+    assert sent["calls"] <= 400, dict(sent)
+
+
+def test_adc_shortlist_scores_are_the_left_deep_lut_fold(
+    spark, vectors, cell_sums, tmp_path
+):
+    """Every shortlisted ``__adc`` equals, bit for bit, the driver-side
+    left-deep fold of the query LUT over the row's persisted codes."""
+    from lmo_data_catalog_spark.functions.pq_codebook import CODEBOOK, PQ_M, PQ_SUB
+
+    state, qvec = _shortlist_inputs(spark, vectors, cell_sums, str(tmp_path / "ix"))
+    def dist(j, c):
+        acc = None
+        for i in range(PQ_SUB):
+            t = qvec[j * PQ_SUB + i] - c[i]
+            acc = t * t if acc is None else acc + t * t
+        return acc
+
+    luts = [[dist(j, c) for c in CODEBOOK[j]] for j in range(PQ_M)]
+    codes = {r["id"]: r["codes"] for r in state.table.read().collect()}
+    short = state.adc_shortlist(qvec, nprobe=4, rerank=50).collect()
+    assert len(short) == 50
+    for r in short:
+        want = luts[0][codes[r["id"]][0]]
+        for j in range(1, PQ_M):
+            want += luts[j][codes[r["id"]][j]]
+        assert r["__adc"] == want, r["id"]

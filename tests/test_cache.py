@@ -61,6 +61,25 @@ def test_release_frees_one_checkpoint_and_is_idempotent(spark):
     assert cache.release_all() == 0
 
 
+def test_materialize_stores_and_counts_in_one_job(spark):
+    """``cache.materialize`` returns the row count from the job that
+    stores the checkpoint: one Spark job for a map-only frame, where a
+    checkpoint then ``DataFrame.count()`` takes two. The frame reads
+    the stored blocks afterwards and is released like any checkpoint."""
+    jsc = spark.sparkContext._jsc
+    dag = jsc.sc().dagScheduler()
+    cache.release_all()
+    before = dag.nextJobId()
+    df, rows = cache.materialize(spark.range(1000).filter("id % 3 = 0"))
+    assert (rows, dag.nextJobId() - before) == (334, 1)
+    rdd = df._jdf.queryExecution().analyzed().rdd()
+    assert rdd.isCheckpointed()
+    assert rdd.id() in set(jsc.getPersistentRDDs().keySet())
+    assert df.count() == 334
+    cache.release(df)
+    assert rdd.id() not in set(jsc.getPersistentRDDs().keySet())
+
+
 def test_only_cache_module_checkpoints():
     """Every checkpoint goes through ``cache.checkpoint``, so an
     unreleasable one cannot be added without this test going red."""

@@ -310,24 +310,70 @@ def test_kcore_is_fixpoint_and_raises_without_convergence(spark):
         kcore(path, k=2, max_rounds=1)
 
 
+def _build_jobs(spark, build):
+    """(Spark jobs fired while ``build()`` runs, its result)."""
+    from lmo_data_catalog_spark import cache
+
+    cache.release_all()  # no cached frame from an earlier test
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    out = build()
+    return dag.nextJobId() - before, out
+
+
 def test_kcore_window_peel_build_jobs(spark):
     """Plan budget: while it builds, the window peel runs only the
-    edge count and one checkpointed count per round of up to three
-    levels. A 20-node path at k=2 peels its two endpoints per level
-    (10 live levels); the build fired 26 Spark jobs when the count was
-    pinned, and lower is fine."""
-    from lmo_data_catalog_spark import cache
+    jobs that store and count one checkpoint per round of up to three
+    levels — no warm-up count of the input, and each count runs on the
+    checkpoint's own RDD. A 20-node path at k=2 peels its two
+    endpoints per level (10 live levels); the build fired 20 Spark
+    jobs when the count was pinned (26 with the warm-up count and
+    ``DataFrame.count()`` per round), and lower is fine."""
     from lmo_data_catalog_spark.operators.graph import kcore
 
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 20)], ["src", "dst"]
     )
-    cache.release_all()  # no cached frame from an earlier test
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    before = dag.nextJobId()
-    core = kcore(path, k=2)
-    assert dag.nextJobId() - before <= 26
+    jobs, core = _build_jobs(spark, lambda: kcore(path, k=2))
+    assert jobs <= 20
     assert core.count() == 0
+
+
+def test_kcore_input_already_at_its_core(spark):
+    """K5 at k=4 is its own 4-core: nothing peels. Round 1 has no
+    earlier count to compare with, so a second round proves the
+    fixpoint; the build fired 10 Spark jobs when the count was pinned
+    (9 with the warm-up count, which let round 1 stop the loop)."""
+    from lmo_data_catalog_spark.operators.graph import kcore
+
+    k5 = spark.createDataFrame(
+        [(i, j) for i in range(1, 6) for j in range(i + 1, 6)], ["src", "dst"]
+    )
+    jobs, core = _build_jobs(spark, lambda: kcore(k5, k=4))
+    assert jobs <= 10
+    assert {(r.node, r.core_degree) for r in core.collect()} == {
+        (n, 4) for n in range(1, 6)
+    }
+
+
+def test_kcore_hub_safe_build_jobs(spark):
+    """Plan budget: the hub-safe peel counts each level's dropped set
+    on its checkpoint RDD, one job fewer per level than
+    ``DataFrame.count()``. The hubbed graph takes two levels (the
+    leaves drop and take every hub edge with them, then the K4 drops
+    nothing); the build fired 6
+    Spark jobs when the count was pinned, 8 with
+    ``DataFrame.count()``."""
+    from lmo_data_catalog_spark.operators.graph import kcore
+
+    hubbed = spark.createDataFrame(
+        [(0, i) for i in range(1, 21)]
+        + [(30, 31), (30, 32), (30, 33), (31, 32), (31, 33), (32, 33)],
+        ["src", "dst"],
+    )
+    jobs, core = _build_jobs(spark, lambda: kcore(hubbed, k=3, hub_safe=True))
+    assert jobs <= 6
+    assert {r.node for r in core.collect()} == {30, 31, 32, 33}
 
 
 def test_kcore_canonicalize_handles_dirty_edges(spark):

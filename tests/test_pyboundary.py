@@ -1,6 +1,8 @@
 """Pin pyboundary's JVM-function memo: after warm-up, a builtin ``F.*``
 call costs one py4j round trip, not the three PySpark's uncached
-``_get_jvm_function`` takes (two reflection lookups + the call)."""
+``_get_jvm_function`` takes (two reflection lookups + the call). Also
+pin ``literal_array``: a constant array is one exact literal, and no
+module builds one element by element."""
 
 from __future__ import annotations
 
@@ -59,3 +61,58 @@ def test_apply_is_idempotent():
     pyboundary.apply()
     pyboundary.apply()
     assert builtin._get_jvm_function is before
+
+
+def test_literal_array_is_one_exact_literal(spark):
+    """``literal_array`` round-trips every value bit-for-bit and folds
+    to ONE array ``Literal`` in the optimized plan (no ``CreateArray``
+    of per-element literals); NaN has no JSON form and raises."""
+    import math
+    import struct
+
+    import pytest
+
+    from lmo_data_catalog_spark.pyboundary import literal_array
+
+    doubles = [0.1, 5e-324, 1.7976931348623157e308, -0.0]
+    longs = [2**63 - 1, -(2**63 - 1)]
+    df = spark.range(1).select(
+        literal_array(doubles, "array<double>").alias("d"),
+        literal_array(longs, "array<bigint>").alias("l"),
+    )
+    for col, type_ in (("d", "array<double>"), ("l", "array<bigint>")):
+        one = df.select(col)
+        plan = one._jdf.queryExecution().optimizedPlan().toJSON()
+        assert plan.count("expressions.Literal") == 1, plan
+        assert "CreateArray" not in plan and "JsonToStructs" not in plan, plan
+        assert one.schema[col].dataType.simpleString() == type_
+    row = df.first()
+    assert [struct.pack(">d", v) for v in row["d"]] == [
+        struct.pack(">d", v) for v in doubles
+    ]
+    assert math.copysign(1.0, row["d"][3]) == -1.0
+    assert row["l"] == longs
+    with pytest.raises(ValueError):
+        literal_array([1.0, math.nan], "array<double>")
+
+
+def test_no_module_builds_an_array_of_literals():
+    """Every driver-side constant array goes through
+    ``pyboundary.literal_array``: one literal, not one ``F.lit`` per
+    element inside ``F.array``."""
+    import os
+    import re
+
+    package = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "lmo_data_catalog_spark",
+    )
+    pattern = re.compile(r"F\.array\(\s*\*\s*\[\s*F\.lit\(")
+    bad = []
+    for root, _, files in os.walk(package):
+        for fn in files:
+            if fn.endswith(".py"):
+                with open(os.path.join(root, fn), encoding="utf-8") as fh:
+                    if pattern.search(fh.read()):
+                        bad.append(os.path.relpath(os.path.join(root, fn), package))
+    assert bad == [], f"array of per-element literals in: {bad}"
