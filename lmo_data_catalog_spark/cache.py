@@ -69,8 +69,27 @@ def materialize(df: DataFrame) -> tuple[DataFrame, int]:
 def _checkpoint(df: DataFrame) -> tuple[DataFrame, object]:
     df = df.localCheckpoint(eager=False)
     rdd = df._jdf.queryExecution().analyzed().rdd()
-    _HELD.append((df, lambda: rdd.unpersist(False)))
+
+    def free() -> None:
+        # Nothing is stored before the first action, and unpersisting
+        # then would drop the storage level the checkpoint still needs.
+        # isCheckpointed() alone is not enough: an RDD that only an AQE
+        # shuffle-map stage has read holds its blocks but is unmarked.
+        if rdd.isCheckpointed() or _stores_blocks(df, rdd):
+            rdd.unpersist(False)
+
+    _HELD.append((df, free))
     return df, rdd
+
+
+def _stores_blocks(df: DataFrame, rdd) -> bool:
+    """Whether any partition of ``rdd`` is in a block manager."""
+    master = rdd.context().env().blockManager().master()
+    block_id = df.sparkSession._jvm.org.apache.spark.storage.RDDBlockId
+    return any(
+        master.contains(block_id(rdd.id(), p))
+        for p in range(rdd.getNumPartitions())
+    )
 
 
 def release(df: DataFrame | None) -> None:

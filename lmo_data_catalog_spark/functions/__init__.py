@@ -11,16 +11,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def teer_digit(noc: Column | str) -> Column:
-    """TEER category = 3rd char of ``#NNNNN`` (01_source_me.R:76)."""
-    return F.substring(noc, 3, 1)
-
-
-def hash_prefix(col: Column | str) -> Column:
-    """``paste0("#", x)`` (01_source_me.R:337)."""
-    return F.concat(F.lit("#"), F.col(col) if isinstance(col, str) else col)
-
-
 def cagr(start: Column, end: Column, years: int) -> Column:
     """Compound annual growth rate ``(end/start)^(1/years) - 1``
     (01_source_me.R:56-58)."""

@@ -215,13 +215,6 @@ def decode_bytelevel(symbols: list[str]) -> str:
     return data.decode("utf-8")
 
 
-def bpe_len_bytelevel(
-    text: str, ranks: dict[tuple[str, str], int]
-) -> int:
-    """Byte-level BPE token count for a text span."""
-    return len(encode_bytelevel(text, ranks))
-
-
 #: committed byte-level tables (both trained by
 #: tools/train_bpe_bytelevel.py, both in the published merges.txt
 #: format): "12k" proved format parity and per-lookup

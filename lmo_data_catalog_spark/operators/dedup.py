@@ -532,7 +532,6 @@ def connected_components(
     *,
     id_col: str = "id",
     max_iter: int = 20,
-    shortcut: bool = True,
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components by min-label propagation + pointer
@@ -541,23 +540,22 @@ def connected_components(
     near-dup PAIRS into dedup GROUPS (keep one per cluster).
 
     Iterative Spark: each round joins labels across edges and takes
-    the min, then (``shortcut=True``) replaces each label by its
-    label's label — pointer jumping over the label map (a self-join on
-    the SMALL label table, not the edge set), which collapses
+    the min, then replaces each label by its label's label — pointer
+    jumping over the label map (a self-join on the SMALL label table,
+    not the edge set), which collapses
     chain-shaped components in O(log diameter) rounds instead of
     O(diameter): labels only ever decrease (min with own id included),
     so label(label(v)) ≤ label(v) and the combined step keeps the same
     fixpoint, the per-component min id. Near-dup clusters are usually
-    cliques (1-2 rounds either way); the shortcut is what makes
+    cliques (1-2 rounds either way); pointer jumping is what makes
     adversarial long-path graphs — transitive chains of pairwise
     near-dups — converge (measured in SCALING.md §connected
     components). ``cache.checkpoint`` truncates lineage so plans don't
     grow per round, and ``cache.converge`` frees each superseded
     round. Early-exits when a round changes nothing; RAISES if
     ``max_iter`` rounds pass without convergence rather than
-    returning silently-wrong labels (rounds grow ~log2(diameter) with
-    ``shortcut=True``). ``stats``, if given, receives
-    ``{"rounds": n}``.
+    returning silently-wrong labels (rounds grow ~log2(diameter)).
+    ``stats``, if given, receives ``{"rounds": n}``.
     """
     # The checkpoint (materialized by the count) runs the pair
     # computation ONCE and truncates the logical plan — without
@@ -618,22 +616,21 @@ def connected_components(
                 F.first("own", ignorenulls=True).alias("own"),
             )
         )
-        if shortcut:
-            # pointer jumping: label(v) <- label(label(v)). Labels are
-            # always ids of edge-having nodes (min over a set seeded
-            # with own ids), so the self-join on the label map always
-            # matches; coalesce guards the degenerate case anyway.
-            lmap = rolled.select(
-                F.col("id").alias("__lid"), F.col("label").alias("__llabel")
+        # pointer jumping: label(v) <- label(label(v)). Labels are
+        # always ids of edge-having nodes (min over a set seeded
+        # with own ids), so the self-join on the label map always
+        # matches; coalesce guards the degenerate case anyway.
+        lmap = rolled.select(
+            F.col("id").alias("__lid"), F.col("label").alias("__llabel")
+        )
+        rolled = (
+            rolled.join(lmap, rolled.label == lmap.__lid, "left")
+            .select(
+                "id",
+                F.coalesce("__llabel", "label").alias("label"),
+                "own",
             )
-            rolled = (
-                rolled.join(lmap, rolled.label == lmap.__lid, "left")
-                .select(
-                    "id",
-                    F.coalesce("__llabel", "label").alias("label"),
-                    "own",
-                )
-            )
+        )
         # lazy checkpoint: the convergence count is the first action
         # and materializes it — one job per round instead of two (r14)
         rolled = cache.checkpoint(rolled)

@@ -33,8 +33,3 @@ def not_isin(col: Column | str, values: Sequence) -> Column:
 def not_rlike(col: Column | str, pattern: str) -> Column:
     """F4 — ``!grepl(pat, x)`` with NULL kept (01_source_me.R:74)."""
     return ~F.coalesce(_c(col).rlike(pattern), F.lit(False))
-
-
-def year_between(col: Column | str, lo: int, hi: int) -> Column:
-    """F6 — ``year %in% lo:hi`` (01_source_me.R:65-67)."""
-    return _c(col).between(lo, hi)

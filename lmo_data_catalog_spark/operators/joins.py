@@ -159,120 +159,67 @@ def salted_join(
     *,
     on: Sequence[str],
     salt_buckets: int = 16,
+    hot: DataFrame | None = None,
     how: str = "inner",
 ) -> DataFrame:
     """Skew-mitigating equi-join: split each hot key across
     ``salt_buckets`` tasks.
 
-    The probe (left) side gets a deterministic per-row salt (uniform
-    hash of the whole row); the build (right) side is replicated once
-    per salt value; the join key becomes (keys…, salt). A key holding
-    50% of all rows then occupies ``salt_buckets`` parallel tasks
-    instead of one straggler. Results are identical to the unsalted
-    join for inner/left joins (each left row meets each matching right
-    row exactly once — in its own salt bucket).
+    Probe (left) rows of a hot key get a deterministic per-row salt
+    (uniform hash of the whole row); build (right) rows of a hot key
+    are replicated once per salt value; every other row carries salt 0
+    once. The join key becomes (keys…, salt), so a key holding 50% of
+    all rows occupies ``salt_buckets`` parallel tasks instead of one
+    straggler. Results are identical to the unsalted inner/left join:
+    each left row meets each matching right row exactly once (cold
+    pairs in bucket 0, hot pairs in the left row's bucket), and an
+    unmatched left row is null-extended once.
+
+    ``hot`` is a frame holding (at least) the key columns of the hot
+    keys; it is deduplicated and broadcast, so it must be small — a
+    per-key count over a threshold is at most |left| / threshold rows.
+    The caller computes it, typically from an aggregate it already
+    has (the depth-3 miner derives one hot set from the base item
+    table and passes it to both chained joins). ``hot=None`` salts
+    every key: the blanket form, whose plan has no hot-set join and
+    replicates the whole build side ×``salt_buckets`` — only worth it
+    when the build side is small.
 
     AQE's skew-join split handles moderate skew at runtime; reach for
     explicit salting when one key exceeds what a single task can hold
     even after AQE splitting, or when the skew is known at build time.
-    Replication multiplies the build side ×salt_buckets — keep it the
-    smaller input.
     """
     if how not in ("inner", "left", "left_outer"):
         raise ValueError(f"salted_join supports inner/left, got {how!r}")
+    keys = list(on)
     salt = F.pmod(
         F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(salt_buckets)
     ).cast("int")
-    l_salted = left.withColumn("__salt", salt)
+    if hot is None:
+        # a literal flag, not a column: Catalyst folds both CASE WHENs
+        # away, leaving exactly the blanket plan (a lit(True) column
+        # would survive as an extra field of the build side's Generate)
+        flag = F.lit(True)
+    else:
+        marks = F.broadcast(
+            hot.select(*keys).distinct().withColumn("__is_hot", F.lit(True))
+        )
+        left = left.join(marks, on=keys, how="left")
+        right = right.join(marks, on=keys, how="left")
+        flag = F.col("__is_hot")
+    l_salted = left.withColumn(
+        "__salt", F.when(flag, salt).otherwise(F.lit(0))
+    ).drop("__is_hot")
     r_salted = right.withColumn(
         "__salt",
-        F.explode(literal_array(list(range(salt_buckets)), "array<int>")),
-    )
+        F.explode(
+            F.when(
+                flag, literal_array(list(range(salt_buckets)), "array<int>")
+            ).otherwise(literal_array([0], "array<int>"))
+        ),
+    ).drop("__is_hot")
     return l_salted.join(
-        r_salted, on=[*on, "__salt"], how=how
-    ).drop("__salt")
-
-
-def hybrid_salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    on: Sequence[str],
-    salt_buckets: int = 16,
-    hot_threshold: int = 1024,
-    how: str = "inner",
-    hot_keys: DataFrame | None = None,
-) -> DataFrame:
-    """Skew join that salts ONLY measured-hot keys — the production
-    refinement of :func:`salted_join`, whose blanket ``x salt_buckets``
-    replication of the build side is pure waste when no key is
-    actually hot (measured: the blanket-salted basket self-join costs
-    9.1 s at sf0.1 where the unsalted plan costs ~2.7 s, because the
-    600k-row build side ships x8; this hybrid prices the insurance at
-    ~zero until a hot key exists).
-
-    Mechanics: one map-side-combinable count over the LEFT side's
-    keys finds keys with more than ``hot_threshold`` rows — by
-    construction a SMALL set (at most |left| / hot_threshold keys),
-    so it broadcasts. Left rows of hot keys get the per-row uniform
-    salt; all other rows salt 0. Right rows of hot keys replicate
-    across all buckets; all other rows carry salt 0 once. The join
-    key becomes (keys…, salt): results are identical to the plain
-    inner join (each matching pair meets exactly once — cold pairs in
-    bucket 0, hot pairs in the left row's bucket), while a hot key's
-    output spreads over ``salt_buckets`` tasks.
-
-    The left-count heuristic is the standard one (for self-joins both
-    sides share counts; for asymmetric joins put the side whose
-    per-key row count drives the blowup on the left). At 100 TB the
-    hot-key count is one cheap aggregate whose output is bounded by
-    the threshold — the same pass that computes per-key supports in
-    basket pipelines, so it is often free.
-
-    ``hot_keys`` (a frame of just the key columns) overrides the
-    left-count detection — pass it when the hot set is already known
-    from an upstream aggregate, or when the left frame is itself an
-    expensive join whose recomputation for the count would double the
-    work (the chained depth-3 miner passes the >threshold baskets
-    computed ONCE from the base item table to both joins)."""
-    if how != "inner":
-        raise ValueError(f"hybrid_salted_join supports inner, got {how!r}")
-    keys = list(on)
-    hot_src = (
-        hot_keys.select(*keys).distinct()
-        if hot_keys is not None
-        else left.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > hot_threshold)
-        .select(*keys)
-    )
-    hot = F.broadcast(hot_src.withColumn("__is_hot", F.lit(True)))
-    salt = F.pmod(
-        F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(salt_buckets)
-    ).cast("int")
-    l_salted = (
-        left.join(hot, on=keys, how="left")
-        .withColumn(
-            "__salt",
-            F.when(F.col("__is_hot"), salt).otherwise(F.lit(0)),
-        )
-        .drop("__is_hot")
-    )
-    r_salted = (
-        right.join(hot, on=keys, how="left")
-        .withColumn(
-            "__salt",
-            F.explode(
-                F.when(
-                    F.col("__is_hot"),
-                    literal_array(list(range(salt_buckets)), "array<int>"),
-                ).otherwise(literal_array([0], "array<int>"))
-            ),
-        )
-        .drop("__is_hot")
-    )
-    return l_salted.join(
-        r_salted, on=[*keys, "__salt"], how="inner"
+        r_salted, on=[*keys, "__salt"], how=how
     ).drop("__salt")
 
 

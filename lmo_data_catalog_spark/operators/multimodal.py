@@ -132,62 +132,6 @@ def decode_image_meta(
     )
 
 
-RESIZED_SCHEMA = (
-    "doc_id long, width int, height int, out_width int, out_height int, "
-    "scale double"
-)
-
-
-def resize_image_meta(
-    df: DataFrame,
-    *,
-    target: int = 224,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Resize plumbing: compute output geometry (aspect-preserving,
-    short side → ``target``) per image via mapInPandas.
-
-    True header dimensions for PNG/GIF/JPEG payloads (same
-    :func:`parse_image_dims` path as decode), byte-length fake for
-    everything else; the pixel resample itself is the stubbed codec
-    step — geometry, schema, and batch flow are the real Spark
-    surface.
-    """
-    import pandas as pd
-
-    def resize(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            n = pdf[payload_col].apply(len)
-            parsed = [parse_image_dims(bytes(b)) for b in pdf[payload_col]]
-            w = pd.Series(
-                [p[1] if p else fw for p, fw in zip(parsed, 64 + n % 576)],
-                index=pdf.index,
-            )
-            h = pd.Series(
-                [
-                    p[2] if p else fh
-                    for p, fh in zip(parsed, 64 + (n * 7) % 416)
-                ],
-                index=pdf.index,
-            )
-            scale = target / pd.concat([w, h], axis=1).min(axis=1)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "width": w,
-                    "height": h,
-                    "out_width": (w * scale).round().astype("int64"),
-                    "out_height": (h * scale).round().astype("int64"),
-                    "scale": scale,
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        resize, schema=RESIZED_SCHEMA
-    )
-
-
 FRAME_SCHEMA = "doc_id long, frame_idx int, ts_ms long, frame binary"
 
 
@@ -929,100 +873,6 @@ def gif_frame_stats(
 
     return df.select(id_col, payload_col).mapInPandas(
         stats, schema=GIF_FRAME_STATS_SCHEMA
-    )
-
-
-GIF_STATS_TOLERANT_SCHEMA = GIF_FRAME_STATS_SCHEMA + ", status string, reason string"
-
-
-def gif_frame_stats_tolerant(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    every_n: int = 1,
-) -> DataFrame:
-    """Crawl-ingest variant of :func:`gif_frame_stats` (r12 advisor
-    finding): the strict decoder's refusal classes — including the
-    r12 strictness bump where an LZW stream whose final dictionary
-    entry straddles past ``n_pixels`` now raises instead of being
-    truncated, and the total-frame-pixel allocation cap — must be
-    ROUTED on a 100 TB crawl, not die the stage. Every payload gets
-    at least one row: ``status`` is ``ok`` (per-frame rows, exactly
-    the strict operator's output), ``resource_cap`` (canvas or
-    frame-total pixel cap — a real GIF too big to decode under the
-    allocation contract, dims from the header), or ``malformed``
-    (bad signature, truncation, LZW corruption — including
-    encoder-emitted straddling final codes, which conformant
-    encoders never produce but crawl tails do). ``reason`` carries
-    the decoder message for tail-by-cause audits. The strict sibling
-    keeps raising for pipelines that want fail-fast."""
-    import pandas as pd
-
-    from .gif import GifResourceCap, decode_gif_frames
-
-    if every_n < 1:
-        raise ValueError("every_n must be >= 1")
-
-    def stats(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id", "frame_idx", "n_frames", "ts_ms",
-                    "width", "height", "mean_r", "mean_g", "mean_b",
-                    "status", "reason",
-                )
-            }
-
-            def refusal(did, payload: bytes, msg: str, cap: bool) -> None:
-                meta = parse_image_dims(payload)
-                dims_ok = meta is not None and meta[0] == "gif"
-                rows["doc_id"].append(did)
-                rows["frame_idx"].append(None)
-                rows["n_frames"].append(None)
-                rows["ts_ms"].append(None)
-                rows["width"].append(meta[1] if dims_ok else None)
-                rows["height"].append(meta[2] if dims_ok else None)
-                rows["mean_r"].append(None)
-                rows["mean_g"].append(None)
-                rows["mean_b"].append(None)
-                rows["status"].append("resource_cap" if cap else "malformed")
-                rows["reason"].append(msg)
-
-            for did, b in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(b)
-                try:
-                    w, h, frames = decode_gif_frames(payload)
-                except (ValueError, IndexError, _struct.error) as e:
-                    # classified BY TYPE, not by message substring
-                    # (r13 advisor): GifResourceCap is the decoder's
-                    # own cap contract; everything else is malformed.
-                    refusal(
-                        did, payload, str(e),
-                        cap=isinstance(e, GifResourceCap),
-                    )
-                    continue
-                ts = 0
-                for i, (delay_ms, px) in enumerate(frames):
-                    if i % every_n == 0:
-                        means = px.reshape(-1, 3).mean(0)
-                        rows["doc_id"].append(did)
-                        rows["frame_idx"].append(i)
-                        rows["n_frames"].append(len(frames))
-                        rows["ts_ms"].append(ts)
-                        rows["width"].append(w)
-                        rows["height"].append(h)
-                        rows["mean_r"].append(round(float(means[0]), 6))
-                        rows["mean_g"].append(round(float(means[1]), 6))
-                        rows["mean_b"].append(round(float(means[2]), 6))
-                        rows["status"].append("ok")
-                        rows["reason"].append(None)
-                    ts += delay_ms
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        stats, schema=GIF_STATS_TOLERANT_SCHEMA
     )
 
 

@@ -34,6 +34,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import cagr
 from ..operators import filters
 from ..operators.reshape import unpivot_years
 from ..schema_toolkit import (
@@ -133,10 +134,6 @@ def _clean_long(df: DataFrame) -> DataFrame:
     )
 
 
-def _cagr(v0: Column, v1: Column, n: int) -> Column:
-    return F.pow(v1 / v0, 1.0 / n) - F.lit(1.0)
-
-
 def _metric_exprs(cfg: LMOConfig, metric: str) -> dict[str, Column]:
     """The reference's per-group R closures (``cagrs`` SM:50-62,
     ``sums`` SM:63-71) as conditional aggregates."""
@@ -147,9 +144,9 @@ def _metric_exprs(cfg: LMOConfig, metric: str) -> dict[str, Column]:
             for yr in (cfg.fyod, cfg.fyfn, cfg.tyfn)
         }
         return {
-            "1st 5-year CAGR": _cagr(at[cfg.fyod], at[cfg.fyfn], 5),
-            "2nd 5-year CAGR": _cagr(at[cfg.fyfn], at[cfg.tyfn], 5),
-            "10-year CAGR": _cagr(at[cfg.fyod], at[cfg.tyfn], 10),
+            "1st 5-year CAGR": cagr(at[cfg.fyod], at[cfg.fyfn], 5),
+            "2nd 5-year CAGR": cagr(at[cfg.fyfn], at[cfg.tyfn], 5),
+            "10-year CAGR": cagr(at[cfg.fyod], at[cfg.tyfn], 10),
         }
     if metric == "sums":
         rng = {

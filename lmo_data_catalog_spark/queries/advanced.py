@@ -678,8 +678,6 @@ def salted_join_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     side is too big to broadcast and one key exceeds a task even
     after AQE skew-split. SCALING.md §skew records the actual
     per-task flattening with broadcast disabled."""
-    from ..operators.joins import salted_join
-
     li = Catalog(spark, sf_dir).lineitem.select(
         "l_returnflag", "l_extendedprice", "l_discount"
     )
@@ -894,6 +892,17 @@ def association_rules_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _hot_baskets(li: DataFrame) -> DataFrame:
+    """The orderkeys of ``li`` (distinct (order, item) rows) holding
+    more than 64 items: the hot set of the salted basket self-joins."""
+    return (
+        li.groupBy("l_orderkey")
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .filter(F.col("__n") > 64)
+        .select("l_orderkey")
+    )
+
+
 @query(
     "association_rules_topk_salted",
     oracle="""
@@ -937,28 +946,26 @@ def association_rules_topk_salted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """``association_rules_topk`` with the pair-generating basket
-    self-join routed through operators/joins.py::hybrid_salted_join
-    x8 — the hot-basket insurance the r11 verdict asked to measure
-    (ask #7): a mega-order with M distinct items emits C(M,2) pairs
-    from ONE orderkey task in the unsalted plan; hot-key salting
-    spreads it over 8 tasks at plan time
-    (SCALING.md §itemset-miner skew has the per-task histograms at an
-    8M-pair hot basket — the same mechanics
-    cooccurrence_part_pairs_salted fixed, inherited here). HYBRID,
-    not blanket: only keys whose basket exceeds 64 distinct items
-    are salted (one map-side-combinable count, broadcast hot set),
-    so on TPC-H's bounded ~7-item baskets nothing replicates and
-    the insurance costs ~nothing (blanket salted_join x8 measured
-    9.1 s at sf0.1 — it ships the 600k-row build side x8 whether or
-    not any key is hot — vs ~2.7 s unsalted; the hybrid restores
-    the unsalted cost while keeping the mega-basket flattening).
-    Same oracle as the unsalted sibling: hot-only salting is
-    result-invariant for inner equi-joins (cold pairs meet in
-    bucket 0, hot pairs in the left row's bucket, each exactly
-    once), so the differential hash-matches the two variants
-    against ONE SQL truth."""
+    self-join routed through operators/joins.py::salted_join's
+    hot-key form x8 — the hot-basket insurance the r11 verdict asked
+    to measure (ask #7): a mega-order with M distinct items emits
+    C(M,2) pairs from ONE orderkey task in the unsalted plan; hot-key
+    salting spreads it over 8 tasks at plan time (SCALING.md
+    §itemset-miner skew has the per-task histograms at an 8M-pair
+    hot basket — the same mechanics cooccurrence_part_pairs_salted
+    fixed, inherited here). Hot keys only, not blanket: the hot set
+    is the orders with more than 64 distinct items (one
+    map-side-combinable count, broadcast), so on TPC-H's bounded
+    ~7-item baskets nothing replicates and the insurance costs
+    ~nothing (blanket salting x8 measured 9.1 s at sf0.1 — it ships
+    the 600k-row build side x8 whether or not any key is hot — vs
+    ~2.7 s unsalted; hot-only salting restores the unsalted cost
+    while keeping the mega-basket flattening). Same oracle as the
+    unsalted sibling: hot-only salting is result-invariant for inner
+    equi-joins (cold pairs meet in bucket 0, hot pairs in the left
+    row's bucket, each exactly once), so the differential
+    hash-matches the two variants against ONE SQL truth."""
     from .. import cache
-    from ..operators.joins import hybrid_salted_join
 
     li = (
         Catalog(spark, sf_dir)
@@ -971,8 +978,8 @@ def association_rules_topk_salted(
     a = li.toDF("l_orderkey", "pa")
     b = li.toDF("l_orderkey", "pb")
     pair = (
-        hybrid_salted_join(
-            a, b, on=["l_orderkey"], salt_buckets=8, hot_threshold=64
+        salted_join(
+            a, b, on=["l_orderkey"], salt_buckets=8, hot=_hot_baskets(li)
         )
         .filter(F.col("pa") < F.col("pb"))
         .groupBy("pa", "pb")
@@ -1087,12 +1094,12 @@ def frequent_itemsets_depth3_salted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """``frequent_itemsets_depth3`` with BOTH chained orderkey
-    self-joins routed through hybrid_salted_join x8 — the depth-3
+    self-joins routed through salted_join's hot-key form x8 — the depth-3
     half of the r11 hot-basket ask: salting only the first join
     re-collapses the hot key in the second (measured in SCALING.md
     §itemset-miner skew — a 384-part mega-order emits 9.4M
-    triples, 83% on one task unsalted, ~21% salted both). Hybrid
-    hot-only salting (threshold 64) keeps the TPC-H cost at the
+    triples, 83% on one task unsalted, ~21% salted both). Hot-only
+    salting (orders over 64 items) keeps the TPC-H cost at the
     unsalted plan's level — no key is hot, so neither join
     replicates — and the oracle is the unsalted sibling's SQL
     verbatim, pinning result-invariance through the differential."""
@@ -1103,7 +1110,7 @@ def _frequent_itemsets_depth3(
     spark: SparkSession, sf_dir: str, *, salted: bool
 ) -> DataFrame:
     """Shared body of the two depth-3 miners; ``salted`` routes both
-    chained orderkey joins through hybrid_salted_join x8."""
+    chained orderkey joins through salted_join x8 with one hot set."""
     li = (
         Catalog(spark, sf_dir)
         .lineitem.select("l_orderkey", "l_partkey")
@@ -1113,24 +1120,17 @@ def _frequent_itemsets_depth3(
     b = li.toDF("l_orderkey", "pb")
     c = li.toDF("l_orderkey", "pc")
     if salted:
-        from ..operators.joins import hybrid_salted_join
-
         # hot baskets computed ONCE from the base item table: an
         # order with >64 distinct items is hot for BOTH joins (the
         # pair stage's per-key fan-out only grows from there), and
-        # deriving it here avoids recomputing the pair join for the
-        # second hybrid's left-count detection
-        hot = (
-            li.groupBy("l_orderkey")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > 64)
-            .select("l_orderkey")
-        )
-        ab = hybrid_salted_join(
-            a, b, on=["l_orderkey"], salt_buckets=8, hot_keys=hot
+        # deriving it here avoids recomputing the pair join to find
+        # the second join's hot keys
+        hot = _hot_baskets(li)
+        ab = salted_join(
+            a, b, on=["l_orderkey"], salt_buckets=8, hot=hot
         ).filter(F.col("pa") < F.col("pb"))
-        triples = hybrid_salted_join(
-            ab, c, on=["l_orderkey"], salt_buckets=8, hot_keys=hot
+        triples = salted_join(
+            ab, c, on=["l_orderkey"], salt_buckets=8, hot=hot
         ).filter(F.col("pb") < F.col("pc"))
     else:
         triples = (

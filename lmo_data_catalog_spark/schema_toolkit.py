@@ -56,12 +56,6 @@ def title_case_names(df: DataFrame) -> DataFrame:
     return df.toDF(*[title_case(c.replace("_", " ")) for c in df.columns])
 
 
-def select_by_prefix(df: DataFrame, prefix: str, *, invert: bool = False) -> list[str]:
-    """Column names matching ``starts_with(prefix)`` (SM:101)."""
-    hit = [c for c in df.columns if c.startswith(prefix)]
-    return [c for c in df.columns if c not in hit] if invert else hit
-
-
 def select_by_regex(df: DataFrame, pattern: str) -> list[str]:
     """Column names matching a regex (SM:170 ``str_detect(colnames, ...)``)."""
     rx = re.compile(pattern)

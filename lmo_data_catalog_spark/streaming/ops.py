@@ -216,60 +216,6 @@ def user_running_totals_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def user_running_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-user running totals on ``transformWithStateInPandas``
-    (Spark 4, SPARK-46815) — the successor stateful API: typed state
-    handles (ValueState here; List/MapState available), optional TTL,
-    and timers, instead of ``applyInPandasWithState``'s single state
-    tuple. Same semantics as :func:`user_running_totals_stream`, so
-    both APIs are pinned against the one batch oracle.
-
-    Requires the RocksDB state store (``run_available_now`` flips the
-    provider conf for TWS queries) and the ``protobuf`` package — the
-    TWS state server speaks protobuf to the Python worker. In
-    environments without protobuf the query fails at start with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE; the test suite
-    skips accordingly (import-gate policy, like openpyxl/Pillow).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "totals", "n_events bigint, total_value double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = (0, 0.0)
-            if self._state.exists():
-                n, total = self._state.get()
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 4)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=_TOTALS_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def user_running_totals_batch(events: DataFrame) -> DataFrame:
     """Batch oracle for :func:`user_running_totals_stream`'s final
     state: a plain aggregate (the stream's last update per user)."""
@@ -310,38 +256,19 @@ def incremental_parquet_sink(
 
 
 def run_available_now(
-    stream_df: DataFrame, *, output_mode: str, name: str, rocksdb: bool = False
+    stream_df: DataFrame, *, output_mode: str, name: str
 ) -> DataFrame:
     """Execute a streaming frame to completion over existing input
     (``Trigger.AvailableNow``) into an in-memory table; returns the
-    result as a batch frame. Test/backfill harness. ``rocksdb=True``
-    runs the query on the RocksDB state store provider (required by
-    ``transformWithStateInPandas``), restoring the session's provider
-    afterwards."""
-    spark = stream_df.sparkSession
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    if rocksdb:
-        spark.conf.set(
-            key,
-            "org.apache.spark.sql.execution.streaming."
-            "state.RocksDBStateStoreProvider",
-        )
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if rocksdb:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
+    result as a batch frame. Test/backfill harness."""
+    q = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     return stream_df.sparkSession.table(name)
 
 

@@ -61,6 +61,19 @@ def test_release_frees_one_checkpoint_and_is_idempotent(spark):
     assert cache.release_all() == 0
 
 
+def test_releasing_an_unmaterialized_checkpoint_keeps_it_usable(spark):
+    """Before its first action a checkpoint has stored nothing, so
+    releasing it frees nothing and the frame still answers."""
+    from pyspark.sql import functions as F
+
+    cache.release_all()
+    df = cache.checkpoint(
+        spark.range(1000).groupBy((F.col("id") % 97).alias("g")).count()
+    )
+    assert cache.release_all() == 1
+    assert df.count() == 97
+
+
 def test_materialize_stores_and_counts_in_one_job(spark):
     """``cache.materialize`` returns the row count from the job that
     stores the checkpoint: one Spark job for a map-only frame, where a

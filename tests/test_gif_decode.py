@@ -468,54 +468,13 @@ def test_frame_count_amplification_cap():
     assert MAX_TOTAL_PIXELS >= 20 * 16  # sanity: legit animations fit
 
 
-def test_gif_frame_stats_tolerant_routes_refusals(spark):
-    """Crawl-ingest routing (r12 advisor): ok payloads produce the
-    strict operator's per-frame rows; malformed payloads (including
-    the r12 strictness bump on straddling final LZW codes) and
-    cap-exceeding payloads produce status rows instead of dying the
-    stage."""
-    from lmo_data_catalog_spark.operators.multimodal import (
-        gif_frame_stats_tolerant,
-    )
-
-    pal = _pal(4)
-    idx = np.arange(16, dtype=np.uint8).reshape(4, 4) % 4
-    ok = encode_gif((4, 4), pal, [{"idx": idx}, {"idx": idx}])
-    huge = bytearray(ok)
-    huge[6:10] = struct.pack("<HH", 65535, 65535)
-    rows = spark.createDataFrame(
-        [(1, ok), (2, b"not a gif"), (3, bytes(huge)), (4, ok[:20])],
-        "doc_id long, payload binary",
-    )
-    out = gif_frame_stats_tolerant(rows).collect()
-    by_doc: dict[int, list] = {}
-    for r in out:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-
-    assert [r["status"] for r in by_doc[1]] == ["ok", "ok"]
-    assert by_doc[1][0]["mean_r"] is not None
-    assert by_doc[2][0]["status"] == "malformed"
-    assert "signature" in by_doc[2][0]["reason"]
-    assert by_doc[3][0]["status"] == "resource_cap"
-    # dims recovered from the header even when decode refuses
-    assert by_doc[3][0]["width"] == 65535
-    assert by_doc[4][0]["status"] == "malformed"
-    assert all(len(v) == 1 for k, v in by_doc.items() if k != 1)
-
-
-def test_tolerant_wrapper_never_dies_on_corruption(spark):
-    """Crawl-grade robustness for the tolerant path: single-byte
-    corruptions, truncations, and random garbage must each produce a
-    status ROW (ok/malformed/resource_cap), never a raised stage —
-    the kernel-level contract behind 'routes the tail instead of
-    dying on it'. Deterministic seed; one Spark pass over the whole
-    corrupt batch so the assertion covers the mapInPandas path, not
-    just the decoder."""
+def test_decoder_refuses_corruption_with_typed_errors():
+    """Crawl-grade robustness of the strict decoder: single-byte
+    corruptions, truncations and random garbage must each either
+    decode or raise one of the refusal types a caller routes on
+    (ValueError, including GifResourceCap; IndexError; struct.error),
+    never anything else. Deterministic seed."""
     import random
-
-    from lmo_data_catalog_spark.operators.multimodal import (
-        gif_frame_stats_tolerant,
-    )
 
     rng = random.Random(13)
     pal = _pal(8)
@@ -523,31 +482,24 @@ def test_tolerant_wrapper_never_dies_on_corruption(spark):
     good = encode_gif((6, 6), pal, [{"idx": idx}, {"idx": idx}])
 
     payloads = []
-    pid = 0
     for _ in range(40):  # single-byte corruptions
         pos = rng.randrange(len(good))
         val = rng.randrange(256)
-        payloads.append(
-            (pid, good[:pos] + bytes([val]) + good[pos + 1 :])
-        )
-        pid += 1
+        payloads.append(good[:pos] + bytes([val]) + good[pos + 1 :])
     for _ in range(20):  # truncations
-        payloads.append((pid, good[: rng.randrange(len(good))]))
-        pid += 1
+        payloads.append(good[: rng.randrange(len(good))])
     for _ in range(20):  # random garbage
         payloads.append(
-            (pid, bytes(rng.randrange(256) for _ in range(rng.randrange(80))))
+            bytes(rng.randrange(256) for _ in range(rng.randrange(80)))
         )
-        pid += 1
 
-    df = spark.createDataFrame(payloads, "doc_id long, payload binary")
-    rows = gif_frame_stats_tolerant(df).collect()
-    seen = {r["doc_id"] for r in rows}
-    assert seen == {p for p, _ in payloads}  # every payload answered
-    for r in rows:
-        assert r["status"] in ("ok", "malformed", "resource_cap")
-        if r["status"] != "ok":
-            assert r["reason"]
+    for payload in payloads:
+        try:
+            decode_gif_frames(payload)
+        except (ValueError, IndexError, struct.error):
+            pass
+    with pytest.raises(ValueError, match="signature"):
+        decode_gif_frames(b"not a gif")
 
 
 def _straddling_final_code_gif() -> bytes:
@@ -582,30 +534,16 @@ def _straddling_final_code_gif() -> bytes:
     return bytes(out)
 
 
-def test_straddling_final_lzw_code_strict_and_tolerant(spark):
+def test_straddling_final_lzw_code_is_corruption():
     """r13 verdict ask #6: the straddling-final-LZW-code shape must
-    (a) raise in the strict decoder as corruption, NOT as a resource
-    cap, and (b) route through gif_frame_stats_tolerant as a
-    ``malformed`` status row rather than raising through the stage."""
+    raise in the strict decoder as corruption, NOT as a resource
+    cap."""
     from lmo_data_catalog_spark.operators.gif import GifResourceCap
-    from lmo_data_catalog_spark.operators.multimodal import (
-        gif_frame_stats_tolerant,
-    )
 
     payload = _straddling_final_code_gif()
     with pytest.raises(ValueError, match="produced 5 pixels") as exc:
         decode_gif_frames(payload)
     assert not isinstance(exc.value, GifResourceCap)
-
-    df = spark.createDataFrame(
-        [(1, payload)], "doc_id long, payload binary"
-    )
-    rows = gif_frame_stats_tolerant(df).collect()
-    assert len(rows) == 1
-    assert rows[0]["status"] == "malformed"
-    assert "produced 5 pixels" in rows[0]["reason"]
-    # header dims still recovered for the audit trail
-    assert (rows[0]["width"], rows[0]["height"]) == (2, 2)
 
 
 def test_resource_cap_is_typed_not_message_matched(spark):

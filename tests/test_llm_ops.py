@@ -369,11 +369,11 @@ def test_connected_components_adversarial_chain(spark):
     assert all(labels[i] == i for i in range(n, n + 8))  # singletons
     diameter = n - 1
     assert st["rounds"] <= math.ceil(math.log2(diameter)) + 2
-    # honest failure: without the shortcut a 127-hop chain cannot
-    # converge in 10 rounds, and the operator must say so
+    # honest failure: even with pointer jumping a 127-hop chain needs
+    # more than 2 rounds, and the operator must say so
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(
-            pairs, nodes, id_col="id", max_iter=10, shortcut=False
+            pairs, nodes, id_col="id", max_iter=2
         ).collect()
 
 

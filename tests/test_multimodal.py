@@ -1,5 +1,5 @@
 """Multimodal plumbing tests: schema, batch shape, determinism, and
-1→N fan-out of the Arrow-batched decode/resize/frame-sample stubs.
+1→N fan-out of the Arrow-batched decode/frame-sample stubs.
 The codec bodies are fakes; everything Spark-side is real.
 """
 
@@ -12,7 +12,6 @@ from lmo_data_catalog_spark.catalog import Catalog
 from lmo_data_catalog_spark.operators.multimodal import (
     decode_image_meta,
     decode_image_real,
-    resize_image_meta,
     sample_frames,
     with_payload,
 )
@@ -24,17 +23,6 @@ SF = "/root/testdata/sf0.001"
 def payloads(spark):
     docs = Catalog(spark, SF).documents
     return with_payload(docs, text_col="text").cache()
-
-
-def test_resize_geometry(payloads):
-    out = resize_image_meta(payloads, target=224)
-    rows = out.collect()
-    assert len(rows) == payloads.count()
-    for r in rows[:100]:
-        assert min(r.out_width, r.out_height) == 224  # short side hits target
-        # aspect preserved within rounding
-        assert abs(r.out_width / r.out_height - r.width / r.height) < 0.02
-        assert r.scale == 224 / min(r.width, r.height)
 
 
 def test_frame_sampling_fanout(payloads):
@@ -130,12 +118,3 @@ def test_decode_real_image_headers(spark):
         assert (strict[i].format, strict[i].width, strict[i].height) == (fmt, w, h)
         assert strict[i].n_bytes == len(payload)
         assert (lenient[i].width, lenient[i].height) == (w, h)
-
-
-def test_resize_uses_real_dims(spark):
-    df = spark.createDataFrame(
-        [(1, _png_bytes(800, 200))], "doc_id long, payload binary"
-    )
-    r = resize_image_meta(df, target=100).collect()[0]
-    assert (r.width, r.height) == (800, 200)
-    assert (r.out_width, r.out_height) == (400, 100)  # short side → 100

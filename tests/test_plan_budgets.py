@@ -65,6 +65,14 @@ BUDGETS = {
     # ranker inputs in c3907bf (measured at add time, cache-cleared)
     "pareto_part_classes": 7,
     "customer_spend_quartiles": 3,
+    # the salted joins' blanket and hot-key forms, and the basket_pairs
+    # triangle graph (measured before salted_join absorbed the hot-key
+    # form, cache-cleared)
+    "salted_join_skew": 3,
+    "cooccurrence_part_pairs_salted": 4,
+    "association_rules_topk_salted": 20,
+    "frequent_itemsets_depth3_salted": 18,
+    "triangle_clustering_parts": 54,
 }
 
 

@@ -38,12 +38,23 @@ def test_salted_inner_equals_plain(skewed):
     assert _sorted(salted.select(*plain.columns)) == _sorted(plain)
 
 
+def _hot(left, threshold):
+    """Keys with more than ``threshold`` left rows — the per-key count
+    a caller passes as ``hot``."""
+    return left.groupBy("k").count().filter(F.col("count") > threshold)
+
+
 def test_salted_left_keeps_unmatched(skewed):
+    """Blanket and hot-key forms: a cold or unmatched left row meets
+    bucket 0 once, so left joins keep every left row exactly once."""
     left, right = skewed
     r_partial = right.filter(F.col("k") <= 4)
     plain = left.join(r_partial, on=["k"], how="left")
-    salted = salted_join(left, r_partial, on=["k"], salt_buckets=8, how="left")
-    assert _sorted(salted.select(*plain.columns)) == _sorted(plain)
+    for hot in (None, _hot(left, 1000)):
+        salted = salted_join(
+            left, r_partial, on=["k"], salt_buckets=8, hot=hot, how="left"
+        )
+        assert _sorted(salted.select(*plain.columns)) == _sorted(plain)
 
 
 def test_salt_spreads_hot_key(skewed, spark):
@@ -67,44 +78,52 @@ def test_salted_join_rejects_unsupported_how(skewed):
         salted_join(left, right, on=["k"], how="full")
 
 
-# ------------------------------------------- hybrid (hot-only) salting
+def test_blanket_plan_folds_to_one_join(spark):
+    """``hot=None`` is the blanket form: the literal hot flag must fold
+    away, leaving one join and no CASE WHEN in the optimized plan."""
+    left = spark.range(100).select((F.col("id") % 7).alias("k"), "id")
+    right = spark.range(7).select(F.col("id").alias("k"))
+    plan = (
+        salted_join(left, right, on=["k"], salt_buckets=8, hot=None)
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    assert "CASE WHEN" not in plan
+    assert plan.count("Join ") == 1
+
+
+# ------------------------------------ hybrid (hot-key-only) salting: hot=
 
 
 def test_hybrid_inner_equals_plain(skewed):
     """Hot keys salted, cold keys in bucket 0 — result must still be
     exactly the plain inner join (hot key 0 crosses the threshold,
     keys 1-9 do not)."""
-    from lmo_data_catalog_spark.operators.joins import hybrid_salted_join
-
     left, right = skewed
     plain = left.join(right, on=["k"])
-    hybrid = hybrid_salted_join(
-        left, right, on=["k"], salt_buckets=8, hot_threshold=1000
+    hot = salted_join(
+        left, right, on=["k"], salt_buckets=8, hot=_hot(left, 1000)
     )
-    assert _sorted(hybrid.select(*plain.columns)) == _sorted(plain)
+    assert _sorted(hot.select(*plain.columns)) == _sorted(plain)
 
 
-def test_hybrid_no_hot_keys_no_replication(skewed, spark):
-    """With every key under the threshold the right side must NOT be
-    replicated: the joined row count equals the plain join's, and the
-    exploded salt array is a single element everywhere (checked via
-    the internal frames' semantics — cold right rows appear once)."""
-    from lmo_data_catalog_spark.operators.joins import hybrid_salted_join
-
+def test_hybrid_no_hot_keys_no_replication(skewed):
+    """With every key under the threshold the hot set is empty and the
+    right side must NOT be replicated: the joined rows equal the plain
+    join's (each cold right row carries salt 0 once)."""
     left, right = skewed
     plain = left.join(right, on=["k"])
     # threshold above the hot key's ~2500 rows: nothing is hot
-    hybrid = hybrid_salted_join(
-        left, right, on=["k"], salt_buckets=8, hot_threshold=10_000
+    hot = salted_join(
+        left, right, on=["k"], salt_buckets=8, hot=_hot(left, 10_000)
     )
-    assert _sorted(hybrid.select(*plain.columns)) == _sorted(plain)
+    assert _sorted(hot.select(*plain.columns)) == _sorted(plain)
 
 
 def test_hybrid_self_join_pair_counts(spark):
     """The miners' shape: distinct (order, item) self-join with one
-    mega-order — hybrid pair supports must equal the plain join's."""
-    from lmo_data_catalog_spark.operators.joins import hybrid_salted_join
-
+    mega-order — hot-key pair supports must equal the plain join's."""
     li = spark.range(600).select(
         F.when(F.col("id") < 200, 0)
         .otherwise((F.col("id") % 40) + 1)
@@ -113,37 +132,34 @@ def test_hybrid_self_join_pair_counts(spark):
     )
     a = li.toDF("o", "pa")
     b = li.toDF("o", "pb")
+    hot = li.groupBy("o").count().filter(F.col("count") > 50)
     plain = (
         a.join(b, on="o")
         .filter(F.col("pa") < F.col("pb"))
         .groupBy("pa", "pb")
         .count()
     )
-    hybrid = (
-        hybrid_salted_join(a, b, on=["o"], salt_buckets=8, hot_threshold=50)
+    salted = (
+        salted_join(a, b, on=["o"], salt_buckets=8, hot=hot)
         .filter(F.col("pa") < F.col("pb"))
         .groupBy("pa", "pb")
         .count()
     )
-    assert _sorted(hybrid) == _sorted(plain)
+    assert _sorted(salted) == _sorted(plain)
 
 
 def test_hybrid_rejects_unsupported_how(skewed):
-    from lmo_data_catalog_spark.operators.joins import hybrid_salted_join
-
     left, right = skewed
     with pytest.raises(ValueError):
-        hybrid_salted_join(left, right, on=["k"], how="left")
+        salted_join(left, right, on=["k"], hot=_hot(left, 1000), how="full")
 
 
 def test_hybrid_property_random_skew(spark):
     """Property-style sweep: random key distributions x thresholds x
-    bucket counts — hybrid must equal the plain inner join on every
-    draw (deterministic seeds, no hypothesis dependency needed for a
-    Spark fixture test)."""
+    bucket counts — the hot-key form must equal the plain inner join
+    on every draw (deterministic seeds, no hypothesis dependency
+    needed for a Spark fixture test)."""
     import random
-
-    from lmo_data_catalog_spark.operators.joins import hybrid_salted_join
 
     for seed in (3, 17, 92):
         rng = random.Random(seed)
@@ -158,11 +174,11 @@ def test_hybrid_property_random_skew(spark):
             [(k, k * 7) for k in range(n_keys)], "k int, dim long"
         )
         plain = left.join(right, on=["k"])
-        hybrid = hybrid_salted_join(
+        salted = salted_join(
             left,
             right,
             on=["k"],
             salt_buckets=rng.choice([2, 4, 8]),
-            hot_threshold=rng.choice([1, 10, 100]),
+            hot=_hot(left, rng.choice([1, 10, 100])),
         )
-        assert _sorted(hybrid.select(*plain.columns)) == _sorted(plain), seed
+        assert _sorted(salted.select(*plain.columns)) == _sorted(plain), seed

@@ -120,46 +120,6 @@ def test_stateful_running_totals_final_state(batch_events, stream_src):
     assert _rows(final, "user_id") == _rows(want, "user_id")
 
 
-def _protobuf_available() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithStateInPandas state server requires protobuf "
-    "(permanent in this container — see README §Run; correctness cover "
-    "is the batch mirror test_stateful_running_totals_final_state)",
-)
-def test_stateful_tws_running_totals_final_state(batch_events, stream_src):
-    """transformWithStateInPandas (Spark 4 typed-state API) agrees
-    with the same batch oracle as the applyInPandasWithState op."""
-    got = ops.run_available_now(
-        ops.user_running_totals_tws(stream_src),
-        output_mode="update",
-        name="t_tws_totals",
-        rocksdb=True,
-    )
-    final = (
-        got.withColumn(
-            "rn",
-            F.row_number().over(
-                __import__("pyspark.sql.window", fromlist=["Window"])
-                .Window.partitionBy("user_id")
-                .orderBy(F.desc("n_events"))
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    want = ops.user_running_totals_batch(batch_events)
-    assert _rows(final, "user_id") == _rows(want, "user_id")
-
-
 def test_incremental_parquet_sink_idempotent(spark, batch_events, tmp_path):
     """foreachBatch landing: streamed output equals the batch
     transform, and re-running the finished stream (same checkpoint)

@@ -214,8 +214,8 @@ def main() -> None:
         "`association_rules_topk_salted` and",
         "`frequent_itemsets_depth3_salted` (the hot-basket insurance",
         "pair: 81-83% → ~20% max-task share at 8-9M hot",
-        "pairs/triples, routed through hybrid_salted_join — hot-only",
-        "salting after blanket x8 replication measured 9.1 s vs",
+        "pairs/triples, routed through salted_join's hot-key form —",
+        "hot-only salting after blanket x8 replication measured 9.1 s vs",
         "~3.4 s at sf0.1; SCALING §itemset-miner), and",
         "`ann_ivfadc_topk` / `ann_ivfadc_recall`",
         "(the composed Jegou IndexIVFPQ architecture; the recall row",
