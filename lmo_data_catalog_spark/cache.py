@@ -36,14 +36,23 @@ from pyspark.sql import DataFrame
 #: weakrefs (r14) a builder's frames died when it returned, release_all
 #: freed nothing, and later passes planned against the leaked
 #: InMemoryRelations instead of recomputing from the inputs.
-_HELD: list[tuple[DataFrame, Callable[[], object]]] = []
+#: Each call returns whether the storage is gone.
+_HELD: list[tuple[DataFrame, Callable[[], bool]]] = []
+#: released checkpoints that no action had stored yet: the next action
+#: stores their blocks, so every later release retries them
+_PENDING: list[tuple[DataFrame, Callable[[], bool]]] = []
 _DIRS: list[str] = []
 
 
 def track(df: DataFrame) -> DataFrame:
     """Persist ``df`` and register it for :func:`release_all`."""
     df = df.persist()
-    _HELD.append((df, df.unpersist))
+
+    def free() -> bool:
+        df.unpersist()
+        return True
+
+    _HELD.append((df, free))
     return df
 
 
@@ -70,13 +79,15 @@ def _checkpoint(df: DataFrame) -> tuple[DataFrame, object]:
     df = df.localCheckpoint(eager=False)
     rdd = df._jdf.queryExecution().analyzed().rdd()
 
-    def free() -> None:
+    def free() -> bool:
         # Nothing is stored before the first action, and unpersisting
         # then would drop the storage level the checkpoint still needs.
         # isCheckpointed() alone is not enough: an RDD that only an AQE
         # shuffle-map stage has read holds its blocks but is unmarked.
         if rdd.isCheckpointed() or _stores_blocks(df, rdd):
             rdd.unpersist(False)
+            return True
+        return False
 
     _HELD.append((df, free))
     return df, rdd
@@ -96,12 +107,21 @@ def release(df: DataFrame | None) -> None:
     """Free ``df``'s storage now if it was registered by :func:`track`
     or :func:`checkpoint`; a no-op for any other frame. Only call it
     once nothing lazy still reads ``df``: a released checkpoint's
-    blocks are gone for good."""
-    for i, (held, free) in enumerate(_HELD):
-        if held is df:
-            del _HELD[i]
-            free()
-            return
+    blocks are gone for good. A checkpoint that has stored nothing yet
+    stays pending, and a later release frees what its next action
+    stores."""
+    for entries in (_HELD, _PENDING):
+        for i, entry in enumerate(entries):
+            if entry[0] is df:
+                del entries[i]
+                _free(entry)
+                return
+
+
+def _free(entry: tuple[DataFrame, Callable[[], bool]]) -> None:
+    """Run ``entry``'s free call; keep it pending if nothing was stored."""
+    if not entry[1]():
+        _PENDING.append(entry)
 
 
 def converge(
@@ -141,15 +161,19 @@ def register_dir(path: str) -> str:
 
 def release_all() -> int:
     """Free every tracked frame and checkpoint and delete every
-    registered directory; returns the number of frames released."""
-    released = 0
-    for _, free in _HELD:
-        try:
-            free()
-            released += 1
-        except Exception:  # session already stopped — nothing to free
-            pass
+    registered directory; returns the number of frames released.
+    Pending checkpoints (see :func:`release`) are retried, not counted
+    again."""
+    held, pending = _HELD[:], _PENDING[:]
     _HELD.clear()
+    _PENDING.clear()
+    released = 0
+    for n, entry in enumerate(held + pending):
+        try:
+            _free(entry)
+        except Exception:  # session already stopped — nothing to free
+            continue
+        released += n < len(held)
     for path in _DIRS:
         shutil.rmtree(path, ignore_errors=True)
     _DIRS.clear()

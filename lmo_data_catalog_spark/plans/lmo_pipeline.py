@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from ..functions import cagr
 from ..operators import filters
 from ..operators.reshape import unpivot_years
+from ..pyboundary import literal_array
 from ..schema_toolkit import (
     rename_positional,
     select_by_regex,
@@ -93,8 +94,9 @@ def load_inputs(spark: SparkSession, raw_dir: str) -> LMOInputs:
     """Ingest the four raw files (SM:87-97, :334), side by side.
 
     Each landing read fires a header fetch and a typing aggregate of
-    1-2 tasks on a few hundred KB, so a read's time is the per-job
-    floor, not work. The four are independent and run concurrently
+    1-2 tasks on a few hundred KB. With the typing casts guarded (see
+    :mod:`..sources.ingest`) a read's time is mostly the per-job floor,
+    not work. The four are independent and run concurrently
     through :func:`..session.run_concurrently`; every job keeps the
     caller's job group. The result is the same frames as four reads in
     a row, so there is nothing to choose and no option.
@@ -419,7 +421,10 @@ def data_dictionary(spark: SparkSession, cfg: LMOConfig) -> DataFrame:
         "which represent the second digit of the NOC code.",
         "2021 Census Median Employment Income (Employed)",
     ]
-    return spark.createDataFrame([(r,) for r in rows], "` ` string")
+    # one array literal: a createDataFrame of a list plans a Python RDD scan
+    return spark.range(1).select(
+        F.explode(literal_array(rows, "array<string>")).alias(" ")
+    )
 
 
 # -------------------------------------------------------------------- tbbl10

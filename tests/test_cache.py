@@ -63,15 +63,23 @@ def test_release_frees_one_checkpoint_and_is_idempotent(spark):
 
 def test_releasing_an_unmaterialized_checkpoint_keeps_it_usable(spark):
     """Before its first action a checkpoint has stored nothing, so
-    releasing it frees nothing and the frame still answers."""
+    releasing it frees nothing and the frame still answers. It stays
+    pending: the next release frees what that action stored, without
+    counting the frame twice."""
     from pyspark.sql import functions as F
 
+    jsc = spark.sparkContext._jsc
     cache.release_all()
     df = cache.checkpoint(
         spark.range(1000).groupBy((F.col("id") % 97).alias("g")).count()
     )
+    rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
     assert cache.release_all() == 1
     assert df.count() == 97
+    assert rdd_id in set(jsc.getPersistentRDDs().keySet())
+    assert cache.release_all() == 0
+    assert rdd_id not in set(jsc.getPersistentRDDs().keySet())
+    assert cache.release_all() == 0
 
 
 def test_materialize_stores_and_counts_in_one_job(spark):

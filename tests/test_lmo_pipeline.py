@@ -29,6 +29,7 @@ from lmo_data_catalog_spark.plans.lmo_pipeline import (
     regional_jo_by_occ,
 )
 from lmo_data_catalog_spark.sinks import write_catalog, write_workbook
+from lmo_data_catalog_spark.sinks.workbook import SplitWorkbook
 from lmo_data_catalog_spark.sources.ingest import read_xlsx_rows
 
 CFG = LMOConfig(fyod=2024)
@@ -355,11 +356,30 @@ PYTHON_NODES = r"ExistingRDD|PythonRDD|EvalPython|InPandas|InArrow"
 
 def test_load_inputs_plans_are_jvm_only(spark, raw_dir):
     """No input plan holds a Python RDD or a Python exec node: the
-    banner skip, the parse and the typing all run in the JVM."""
+    banner skip, the parse and the typing all run in the JVM. Each CSV
+    line is parsed at most twice, by the remove_empty filter and by the
+    projection: a filter test per column would be pushed below the
+    parse as one ``from_csv`` per column."""
     inp = load_inputs(spark, raw_dir)
     for name in ("employment", "job_openings", "occ_char", "clusters"):
         plan = getattr(inp, name)._jdf.queryExecution().executedPlan().toString()
         assert not re.search(PYTHON_NODES, plan), (name, plan)
+        assert plan.count("from_csv(") <= 2, (name, plan)
+
+
+def test_artifact_sheet_plans_are_jvm_only(artifacts):
+    """No sheet plan of any artifact holds a Python RDD or a Python exec
+    node, SplitWorkbook head sheets and parent frames included (the
+    Data Dictionary is one array literal, not a createDataFrame)."""
+    for name, wb in artifacts.items():
+        frames = (
+            {**wb.head, "(parent)": wb.parent}
+            if isinstance(wb, SplitWorkbook)
+            else dict(wb)
+        )
+        for sheet, df in frames.items():
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert not re.search(PYTHON_NODES, plan), (name, sheet, plan)
 
 
 def test_load_inputs_fires_at_most_three_jobs_per_input(spark, raw_dir):
