@@ -11,12 +11,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def cagr(start: Column, end: Column, years: int) -> Column:
-    """Compound annual growth rate ``(end/start)^(1/years) - 1``
-    (01_source_me.R:56-58)."""
-    return F.pow(end / start, 1.0 / years) - F.lit(1.0)
-
-
 def separate(col: Column | str, sep: str, names: tuple[str, str]) -> list[Column]:
     """``tidyr::separate`` into exactly two parts (01_source_me.R:336).
 

@@ -19,6 +19,17 @@ per-group R closures); here it is a single shuffle with map-side
 partial agg and whole-stage codegen — the shape that survives a
 100× scale-up.
 
+Building is driver work: py4j round trips, not Spark jobs. Each
+forecast input is unpivoted once per :func:`build_all` and its metric
+tables filter that one long frame; every filter, aggregate and
+projection is SQL text (``DataFrame.filter(text)``, ``F.expr``,
+``selectExpr``), one round trip per expression however many columns
+it names, and each table's headers come from one ``toDF``. A warm
+``build_all`` on the seed-7 fixtures makes 811 main-thread round
+trips, pinned by ``tests/test_lmo_pipeline.py::
+test_build_all_py4j_budget``. See :mod:`..pyboundary` for why the
+text never goes through ``spark.sql(text, src=df)``.
+
 Deliberate deviation (SURVEY §7 risk 4): the reference couples HOO
 sheets to regions *positionally* (sorted sheet names zipped against
 sorted region names, SM:189/196-197). We derive the region from the
@@ -28,21 +39,15 @@ sheet name explicitly and validate it against the data.
 from __future__ import annotations
 
 import re
-from collections.abc import Mapping
+from collections.abc import Callable, Mapping
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import cagr
-from ..operators import filters
-from ..operators.reshape import unpivot_years
-from ..pyboundary import literal_array
-from ..schema_toolkit import (
-    rename_positional,
-    select_by_regex,
-    title_case_names,
-)
+from ..operators.filters import isin_sql, not_isin_sql, not_rlike_sql
+from ..pyboundary import literal_array, sql_name, sql_string
+from ..schema_toolkit import clean_names, select_by_regex, title_case
 from ..session import run_concurrently
 from ..sinks.workbook import SplitWorkbook
 from ..sources.ingest import read_csv_skip, read_excel_ingest, resolve_input
@@ -126,29 +131,43 @@ def load_inputs(spark: SparkSession, raw_dir: str) -> LMOInputs:
 # ---------------------------------------------------------------- shape 1 core
 
 
+def _melt(df: DataFrame, var_name: str = "year", value_name: str = "value") -> DataFrame:
+    """Wide→long over the year columns (SM:101): every column that does
+    not start with ``2`` is an id, so the values are the rest — Spark's
+    default when none are given, which passes only the ids to the JVM.
+    The string-year Expand of ``reshape.unpivot_years(..., cast_year_int
+    =False)``."""
+    ids = [c for c in df.columns if not c.startswith("2")]
+    return df.unpivot(ids, None, var_name, value_name)
+
+
 def _clean_long(df: DataFrame) -> DataFrame:
-    """unpivot → snake_case (SM:101-102). Unpivot precedes clean_names
-    because year columns are selected by the raw ``starts_with("2")``."""
-    from ..schema_toolkit import clean_names
-
-    return clean_names(
-        unpivot_years(df, [c for c in df.columns if not c.startswith("2")])
-    )
+    """unpivot → int year → snake_case (SM:101-102). Unpivot precedes
+    clean_names because year columns are selected by the raw
+    ``starts_with("2")``. :func:`build_all` makes it once per forecast
+    input and every metric table of that input filters the same frame."""
+    return clean_names(_melt(df).withColumn("year", F.col("year").cast("int")))
 
 
-def _metric_exprs(cfg: LMOConfig, metric: str) -> dict[str, Column]:
+def _year_cell(yr: int) -> str:
+    return f"first(CASE WHEN year = {yr} THEN value END, true)"
+
+
+def _cagr(start: str, end: str, years: int) -> str:
+    """Compound annual growth rate ``(end/start)^(1/years) - 1``
+    (01_source_me.R:56-58), double literals as ``F.lit`` types them."""
+    return f"power({end} / {start}, {1.0 / years!r}D) - 1.0D"
+
+
+def _metric_sql(cfg: LMOConfig, metric: str) -> dict[str, str]:
     """The reference's per-group R closures (``cagrs`` SM:50-62,
-    ``sums`` SM:63-71) as conditional aggregates."""
-    y, v = F.col("year"), F.col("value")
+    ``sums`` SM:63-71) as conditional aggregates, in SQL."""
     if metric == "cagrs":
-        at = {
-            yr: F.first(F.when(y == yr, v), ignorenulls=True)
-            for yr in (cfg.fyod, cfg.fyfn, cfg.tyfn)
-        }
+        at = {yr: _year_cell(yr) for yr in (cfg.fyod, cfg.fyfn, cfg.tyfn)}
         return {
-            "1st 5-year CAGR": cagr(at[cfg.fyod], at[cfg.fyfn], 5),
-            "2nd 5-year CAGR": cagr(at[cfg.fyfn], at[cfg.tyfn], 5),
-            "10-year CAGR": cagr(at[cfg.fyod], at[cfg.tyfn], 10),
+            "1st 5-year CAGR": _cagr(at[cfg.fyod], at[cfg.fyfn], 5),
+            "2nd 5-year CAGR": _cagr(at[cfg.fyfn], at[cfg.tyfn], 5),
+            "10-year CAGR": _cagr(at[cfg.fyod], at[cfg.tyfn], 10),
         }
     if metric == "sums":
         rng = {
@@ -157,146 +176,128 @@ def _metric_exprs(cfg: LMOConfig, metric: str) -> dict[str, Column]:
             "10-year Sum": (cfg.fyod + 1, cfg.tyfn),
         }
         return {
-            name: F.sum(F.when(y.between(lo, hi), v))
+            name: f"sum(CASE WHEN year >= {lo} AND year <= {hi} THEN value END)"
             for name, (lo, hi) in rng.items()
         }
     raise ValueError(metric)
 
 
-def metric_table(
-    df_long: DataFrame, cfg: LMOConfig, metric: str
-) -> DataFrame:
+def metric_table(df_long: DataFrame, cfg: LMOConfig, metric: str) -> DataFrame:
     """Shape-1 core: pivot-wide + group metrics in ONE aggregate.
 
     Replaces nest→map(cagrs|sums)→unnest→pivot_wider (SM:104-110 and 5
-    repeats): per-year cells are ``first(when(year==y, value))`` and the
-    metrics are conditional aggregates over the same groups — a single
-    shuffle keyed on the 5 group columns.
+    repeats): per-year cells are ``first(CASE WHEN year = y THEN value
+    END, true)`` and the metrics are conditional aggregates over the
+    same groups — a single shuffle keyed on the 5 group columns. Each
+    aggregate is one SQL expression, and one ``toDF`` gives the headers
+    ``str_to_title(str_replace_all(names, "_", " "))`` with the first
+    column ``NOC`` (SM:112-114), computed in Python.
     """
-    year_cells = [
-        F.first(F.when(F.col("year") == yr, F.col("value")), ignorenulls=True)
-        .alias(str(yr))
-        for yr in cfg.years
-    ]
-    metrics = [
-        expr.alias(name) for name, expr in _metric_exprs(cfg, metric).items()
-    ]
-    return df_long.groupBy(*GROUP_KEYS).agg(*year_cells, *metrics)
+    cells = {str(yr): _year_cell(yr) for yr in cfg.years}
+    cells.update(_metric_sql(cfg, metric))
+    wide = df_long.groupBy(*GROUP_KEYS).agg(
+        *(F.expr(f"{sql} AS {sql_name(name)}") for name, sql in cells.items())
+    )
+    headers = [title_case(c.replace("_", " ")) for c in [*GROUP_KEYS, *cells]]
+    return wide.toDF("NOC", *headers[1:])
 
 
-def _finalize_headers(df: DataFrame) -> DataFrame:
-    """Title-case headers, first column → NOC (SM:112-114)."""
-    return rename_positional(title_case_names(df), 0, "NOC")
-
-
-def _split_by_region(df: DataFrame, drop: list[str]) -> SplitWorkbook:
-    """O2 fan-out: the combined table first, then one sheet per region
-    (SM:140-145), each dropping ``drop``. Nothing runs here: the regions
-    are the table's distinct Geographic Areas, found by whoever reads
-    the keys — the workbook sink collects the (small, aggregated) table
-    once and cuts the region sheets from that. At scale this is the
+@dataclass(frozen=True)
+class MetricArtifact:
+    """A shape-1 artifact (tbbl1/2/3/5/7/8): the long form of one
+    forecast input (``source``), the rows ``where`` keeps (SQL over the
+    snake_case long columns, from the config), then :func:`metric_table`
+    with the ``cagrs`` or ``sums`` metrics. With ``region_drop`` it fans
+    out per region (O2, SM:140-145): the combined table first, then one
+    sheet per Geographic Area, each dropping those columns. Nothing runs
+    here: the workbook sink collects the (small, aggregated) table once
+    and cuts the region sheets from it. At scale this is the
     ``partitionBy`` write path instead."""
-    return SplitWorkbook({"data": df}, df, "Geographic Area", drop)
+
+    source: str
+    where: Callable[[LMOConfig], str]
+    metric: str
+    region_drop: tuple[str, ...] | None = None
+
+    def from_long(self, long: DataFrame, cfg: LMOConfig) -> Workbook:
+        wide = metric_table(long.filter(self.where(cfg)), cfg, self.metric)
+        if self.region_drop is None:
+            return {"data": wide}
+        return SplitWorkbook({"data": wide}, wide, "Geographic Area", self.region_drop)
 
 
 # ------------------------------------------------------------------- artifacts
 
-
-def employment_by_industry_and_occupation_bc(
-    inp: LMOInputs, cfg: LMOConfig
-) -> Workbook:
-    """tbbl1 (SM:100-118): BC only, CAGR triple, one sheet."""
-    long = _clean_long(inp.employment).filter(
-        F.col("geographic_area") == "British Columbia"
-    )
-    return {"data": _finalize_headers(metric_table(long, cfg, "cagrs"))}
+_DEMAND = ("Job Openings", "Expansion Demand", "Replacement Demand")
 
 
-def employment_by_industry_bc_and_regions(
-    inp: LMOInputs, cfg: LMOConfig
-) -> Workbook:
-    """tbbl2 (SM:121-147): NOC=#T, drop pseudo-regions, CAGRs,
-    fan-out per region (region sheets drop NOC/Description/Variable)."""
-    long = _clean_long(inp.employment).filter(
-        (F.col("noc") == "#T")
-        & filters.not_isin("geographic_area", cfg.pseudo_regions)
-    )
-    wide = _finalize_headers(metric_table(long, cfg, "cagrs"))
-    return _split_by_region(wide, drop=["NOC", "Description", "Variable"])
+def _real_regions(cfg: LMOConfig) -> str:
+    return not_isin_sql("geographic_area", cfg.pseudo_regions)
 
 
-def job_openings_by_industry_and_occupation_bc(
-    inp: LMOInputs, cfg: LMOConfig
-) -> Workbook:
-    """tbbl3 (SM:150-167): BC + Job Openings only, range sums."""
-    long = _clean_long(inp.job_openings).filter(
-        (F.col("geographic_area") == "British Columbia")
-        & (F.col("variable") == "Job Openings")
-    )
-    return {"data": _finalize_headers(metric_table(long, cfg, "sums"))}
+#: tbbl1 (SM:100-118): BC only, CAGR triple, one sheet
+employment_by_industry_and_occupation_bc = MetricArtifact(
+    "employment", lambda cfg: "geographic_area = 'British Columbia'", "cagrs"
+)
 
+#: tbbl2 (SM:121-147): NOC=#T, drop pseudo-regions, CAGRs, fan-out per
+#: region (region sheets drop NOC/Description/Variable)
+employment_by_industry_bc_and_regions = MetricArtifact(
+    "employment",
+    lambda cfg: f"noc = '#T' AND {_real_regions(cfg)}",
+    "cagrs",
+    region_drop=("NOC", "Description", "Variable"),
+)
 
-def jo_by_type_ind_occ(inp: LMOInputs, cfg: LMOConfig) -> Workbook:
-    """tbbl5 (SM:207-229): all areas, 3 demand variables, range sums."""
-    long = _clean_long(inp.job_openings).filter(
-        filters.isin(
-            "variable", ["Job Openings", "Expansion Demand", "Replacement Demand"]
-        )
-    )
-    return {"data": _finalize_headers(metric_table(long, cfg, "sums"))}
+#: tbbl3 (SM:150-167): BC + Job Openings only, range sums
+job_openings_by_industry_and_occupation_bc = MetricArtifact(
+    "job_openings",
+    lambda cfg: "geographic_area = 'British Columbia' AND variable = 'Job Openings'",
+    "sums",
+)
+
+#: tbbl5 (SM:207-229): all areas, 3 demand variables, range sums
+jo_by_type_ind_occ = MetricArtifact(
+    "job_openings", lambda cfg: isin_sql("variable", _DEMAND), "sums"
+)
+
+#: tbbl7 (SM:243-270): All-industries slice, CAGRs, regional fan-out
+#: (region sheets drop Industry/Variable)
+employment_by_occupation = MetricArtifact(
+    "employment",
+    lambda cfg: f"industry = 'All industries' AND {_real_regions(cfg)}",
+    "cagrs",
+    region_drop=("Industry", "Variable"),
+)
+
+#: tbbl8 (SM:273-302): All-industries, 3 demand variables, no
+#: pseudo-regions, sums, fan-out (region sheets drop Industry)
+jo_by_type_and_occ = MetricArtifact(
+    "job_openings",
+    lambda cfg: (
+        f"industry = 'All industries' AND {isin_sql('variable', _DEMAND)} "
+        f"AND {_real_regions(cfg)}"
+    ),
+    "sums",
+    region_drop=("Industry",),
+)
 
 
 def employment_by_ind_occ_long(inp: LMOInputs, cfg: LMOConfig) -> Workbook:
     """tbbl6 (SM:232-240): passthrough unpivot, original headers,
     year stays string (pivot_longer keeps character names)."""
     kept = inp.employment.filter(
-        filters.not_isin("Geographic Area", cfg.pseudo_regions)
+        not_isin_sql(sql_name("Geographic Area"), cfg.pseudo_regions)
     )
-    return {
-        "data": unpivot_years(
-            kept,
-            [c for c in kept.columns if not c.startswith("2")],
-            var_name="Date",
-            value_name="Value",
-            cast_year_int=False,
-        )
-    }
-
-
-def employment_by_occupation(inp: LMOInputs, cfg: LMOConfig) -> Workbook:
-    """tbbl7 (SM:243-270): All-industries slice, CAGRs, regional fan-out
-    (region sheets drop Industry/Variable)."""
-    long = _clean_long(inp.employment).filter(
-        (F.col("industry") == "All industries")
-        & filters.not_isin("geographic_area", cfg.pseudo_regions)
-    )
-    wide = _finalize_headers(metric_table(long, cfg, "cagrs"))
-    return _split_by_region(wide, drop=["Industry", "Variable"])
-
-
-def jo_by_type_and_occ(inp: LMOInputs, cfg: LMOConfig) -> Workbook:
-    """tbbl8 (SM:273-302): All-industries, 3 demand variables, no
-    pseudo-regions, sums, fan-out (region sheets drop Industry)."""
-    long = _clean_long(inp.job_openings).filter(
-        (F.col("industry") == "All industries")
-        & filters.isin(
-            "variable",
-            ["Job Openings", "Expansion Demand", "Replacement Demand"],
-        )
-        & filters.not_isin("geographic_area", cfg.pseudo_regions)
-    )
-    wide = _finalize_headers(metric_table(long, cfg, "sums"))
-    return _split_by_region(wide, drop=["Industry"])
+    return {"data": _melt(kept, "Date", "Value")}
 
 
 def jo_long_export(inp: LMOInputs, cfg: LMOConfig) -> DataFrame:
     """tbbl9 (SM:305-317): raw-header unpivot minus pseudo-regions —
     the zipped-CSV export (sink compresses natively, no zip dance)."""
-    return unpivot_years(
-        inp.job_openings,
-        [c for c in inp.job_openings.columns if not c.startswith("2")],
-        cast_year_int=False,
-    ).filter(filters.not_isin("Geographic Area", cfg.pseudo_regions))
+    return _melt(inp.job_openings).filter(
+        not_isin_sql(sql_name("Geographic Area"), cfg.pseudo_regions)
+    )
 
 
 # ------------------------------------------------------------------ HOO (tbbl4)
@@ -304,15 +305,13 @@ def jo_long_export(inp: LMOInputs, cfg: LMOConfig) -> DataFrame:
 
 def regional_jo_by_occ(inp: LMOInputs, cfg: LMOConfig) -> DataFrame:
     """11-year total openings per NOC × region (SM:182-187)."""
-    long = unpivot_years(
+    long = _melt(
         inp.job_openings.filter(
-            (F.col("Industry") == "All industries")
-            & (F.col("Variable") == "Job Openings")
-        ),
-        ["NOC", "Description", "Industry", "Variable", "Geographic Area"],
+            "Industry = 'All industries' AND Variable = 'Job Openings'"
+        )
     )
     return long.groupBy("NOC", "Geographic Area").agg(
-        F.sum("value").alias(cfg.jo_label)
+        F.expr(f"sum(value) AS {sql_name(cfg.jo_label)}")
     )
 
 
@@ -361,30 +360,26 @@ def high_opportunity_occupations(
                 "cfg.region_aliases against the vendor's column naming"
             )
         stacked.append(
-            F.struct(
-                F.lit(sheet).alias("sheet"),
-                F.lit(region).alias("Geographic Area"),
-                F.col(col_for_sheet[sheet]).alias("flag"),
-            )
+            f"struct({sql_string(sheet)} AS sheet, "
+            f"{sql_string(region)} AS `Geographic Area`, "
+            f"{sql_name(col_for_sheet[sheet])} AS flag)"
         )
-    hoo = (
-        occ.select(
-            "NOC",
-            "Description",
-            F.substring("NOC", 3, 1).alias("TEER"),  # SM:76
-            income,
-            F.inline(F.array(*stacked)),
-        )
-        .filter(filters.not_rlike("flag", "Non"))  # SM:74
-    )
+    hoo = occ.selectExpr(
+        "NOC",
+        "Description",
+        "substring(NOC, 3, 1) AS TEER",  # SM:76
+        sql_name(income),
+        f"inline(array({', '.join(stacked)}))",
+    ).filter(not_rlike_sql("flag", "Non"))  # SM:74
     joined = (
         hoo.join(  # SM:81 natural left join, per region sheet
             F.broadcast(jo_by_region),
             on=["NOC", "Geographic Area"],
             how="left",
         )
-        .select(  # SM:82-83 relocate openings after Description
-            "sheet", "NOC", "Description", cfg.jo_label, "TEER", income
+        .selectExpr(  # SM:82-83 relocate openings after Description
+            "sheet", "NOC", "Description", sql_name(cfg.jo_label), "TEER",
+            sql_name(income),
         )
     )
     return SplitWorkbook(
@@ -436,40 +431,38 @@ def jo_by_skill_cluster(inp: LMOInputs, cfg: LMOConfig) -> DataFrame:
     ``#`` re-prefix, SM:336-337) → aliased projection. Lookup side is
     dimension-sized → broadcast."""
     jo_sum = (
-        unpivot_years(
+        _melt(
             inp.job_openings.filter(
-                (F.col("Industry") == "All industries")
-                & (F.col("Geographic Area") == "British Columbia")
-                & (F.col("Variable") == "Job Openings")
+                "Industry = 'All industries' AND `Geographic Area` = "
+                "'British Columbia' AND Variable = 'Job Openings'"
             ).drop("Industry", "Geographic Area", "Variable"),
-            ["NOC", "Description"],
             value_name="jo",
         )
         .groupBy("NOC", "Description")
-        .agg(F.sum("jo").alias("jo"))
+        .agg(F.expr("sum(jo) AS jo"))
     )
-    split = F.split(F.col("NOC"), ": ", 2)
-    clusters = inp.clusters.select(
-        F.concat(F.lit("#"), split.getItem(0)).alias("NOC"),
-        split.getItem(1).alias("Description"),
+    clusters = inp.clusters.selectExpr(
+        "concat('#', split(NOC, ': ', 2)[0]) AS NOC",
+        "split(NOC, ': ', 2)[1] AS Description",
         "new_cluster",
     )
-    return (
-        jo_sum.join(F.broadcast(clusters), on=["NOC", "Description"], how="inner")
-        .select(
-            "NOC",
-            "Description",
-            F.col("new_cluster").alias("Occ Group: Skills Cluster"),
-            F.col("jo").alias(cfg.jo_label),
-        )
+    return jo_sum.join(
+        F.broadcast(clusters), on=["NOC", "Description"], how="inner"
+    ).selectExpr(
+        "NOC",
+        "Description",
+        "new_cluster AS `Occ Group: Skills Cluster`",
+        f"jo AS {sql_name(cfg.jo_label)}",
     )
 
 
 # ------------------------------------------------------------------- assembly
 
-#: artifact name → (builder, sink metadata). pct_last3 mirrors the
-#: 0.0% styling of write_last3_percent (SM:34-49) — presentation-plane
-#: only, the data stays raw fractions (SM:52).
+#: artifact name → (builder, sink metadata); a builder is a
+#: :class:`MetricArtifact` or a function of (inputs, config).
+#: pct_last3 mirrors the 0.0% styling of write_last3_percent
+#: (SM:34-49) — presentation-plane only, the data stays raw fractions
+#: (SM:52).
 ARTIFACTS = {
     "Employment by Industry and Occupation for BC": (
         employment_by_industry_and_occupation_bc,
@@ -510,6 +503,17 @@ ARTIFACTS = {
 
 def build_all(inp: LMOInputs, cfg: LMOConfig | None = None) -> dict[str, Workbook]:
     """All 10 catalog artifacts as lazy workbooks, keyed by the
-    reference's output file stems (SM:118-346)."""
+    reference's output file stems (SM:118-346). Each forecast input is
+    unpivoted once, and its metric tables share that long frame."""
     cfg = cfg or LMOConfig()
-    return {name: builder(inp, cfg) for name, (builder, _) in ARTIFACTS.items()}
+    long: dict[str, DataFrame] = {}
+    out = {}
+    for name, (builder, _) in ARTIFACTS.items():
+        if isinstance(builder, MetricArtifact):
+            src = builder.source
+            if src not in long:
+                long[src] = _clean_long(getattr(inp, src))
+            out[name] = builder.from_long(long[src], cfg)
+        else:
+            out[name] = builder(inp, cfg)
+    return out

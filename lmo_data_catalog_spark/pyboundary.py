@@ -29,6 +29,27 @@ round trips and 0.84–0.97 s to build; with one literal per table row
 it takes 182 round trips and 0.08–0.12 s (sf0.001 embeddings, 4-core
 host), and the optimized plan is the same.
 
+A list handed to the JVM costs a round trip per element. PySpark
+passes the columns of ``select``, ``groupBy``, ``agg``, ``toDF``,
+``unpivot`` and ``join(on=[...])`` as a Python list, which py4j copies
+into a ``java.util.ArrayList`` with one ``add`` command per element,
+plus the list's constructor, the ``PythonUtils.toSeq`` lookup and the
+call; a column named by a string costs one ``F.col`` round trip more.
+A plan whose expressions are SQL text (:func:`sql_string`,
+:func:`sql_name`) parses each one on the JVM side: ``F.expr(text)``
+and ``DataFrame.filter(text)`` are one round trip whatever the text
+holds. Built that way, ``plans/lmo_pipeline.py::build_all`` went from
+2,527 to 811 round trips on the seed-7 fixtures.
+
+Do not build such a plan through ``spark.sql(text, src=df)`` when
+``df`` is cached: the formatter registers ``df`` as a temp view and
+drops the view when the call returns, and in Spark 4.1 dropping a
+view uncaches every cached plan inside it — ``df`` itself, and
+equally ``df.select("*")``, ``df.alias(...)`` or a renamed ``toDF``
+of it. ``tests/test_lmo_pipeline.py::
+test_build_all_keeps_the_callers_inputs_cached`` pins this for the
+publish's cached inputs.
+
 ``apply()`` patches PySpark's function resolver; it is idempotent and
 needs no live SparkContext.
 """
@@ -91,3 +112,14 @@ def literal_array(values, type_: str) -> Column:
         type_,
         {"mode": "FAILFAST"},
     )
+
+
+def sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal (backslash-escaped, the
+    parser's default)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_name(name: str) -> str:
+    """``name`` as a back-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"

@@ -51,22 +51,10 @@ def title_case(s: str) -> str:
     return re.sub(r"[0-9A-Za-z]+", word, s)
 
 
-def title_case_names(df: DataFrame) -> DataFrame:
-    """``str_to_title(str_replace_all(names, "_", " "))`` (SM:112)."""
-    return df.toDF(*[title_case(c.replace("_", " ")) for c in df.columns])
-
-
 def select_by_regex(df: DataFrame, pattern: str) -> list[str]:
     """Column names matching a regex (SM:170 ``str_detect(colnames, ...)``)."""
     rx = re.compile(pattern)
     return [c for c in df.columns if rx.search(c)]
-
-
-def rename_positional(df: DataFrame, index: int, new_name: str) -> DataFrame:
-    """``colnames(x)[i] <- name`` (SM:114)."""
-    cols = list(df.columns)
-    cols[index] = new_name
-    return df.toDF(*cols)
 
 
 def relocate(df: DataFrame, col: str, *, after: str | None = None) -> DataFrame:

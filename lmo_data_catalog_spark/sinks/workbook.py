@@ -10,7 +10,11 @@ styling on trailing CAGR columns (``write_last3_percent``,
   ``sources/ingest.py::read_xlsx_rows``) — sheet order, inline
   strings, and the reference's ``0.0%`` percent format on trailing
   CAGR columns, with zero dependencies. The reference's
-  ``asTable=TRUE`` table styling is not reproduced.
+  ``asTable=TRUE`` table styling is not reproduced. It formats each
+  sheet column by column, not cell by cell, and writes the same bytes
+  the per-cell writer did (``tests/test_xlsx_golden.py``): on the
+  nine catalog workbooks of a 4-core ``lmo_publish`` pass (~154k
+  cells) its serial time fell from ~0.43 to ~0.26 s.
 - Split path — a :class:`SplitWorkbook` (the O2 per-region fan-out,
   SM:140-145, and the HOO sheets, SM:169-203) is collected ONCE: its
   parent frame comes to the driver in one ``toPandas`` and every split
@@ -35,8 +39,12 @@ distributed (one file per partition, no driver collect).
 
 from __future__ import annotations
 
+import math
 import os
+import re
 from collections.abc import Iterator, Mapping, Sequence
+
+import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -221,6 +229,81 @@ def _sheet_name(n: str) -> str:
 
 _PCT_STYLE_ID = 1  # cellXfs index carrying the 0.0% format below
 
+#: C0 controls (except \t \n \r) are ILLEGAL in XML 1.0 even escaped,
+#: so escaping strips them, or the part is unparseable no matter how
+#: it is quoted (fuzz-found); the regex finds text that needs the table
+_ESCAPE = {c: None for c in range(32) if chr(c) not in "\t\n\r"}
+_ESCAPE.update({ord("&"): "&amp;", ord("<"): "&lt;", ord(">"): "&gt;"})
+_ESCAPE_ATTR = {**_ESCAPE, ord('"'): "&quot;"}
+_NEEDS_ESCAPE = re.compile(r'[\x00-\x08\x0b\x0c\x0e-\x1f&<>"]')
+
+
+def _escape(s: str, table: dict = _ESCAPE) -> str:
+    return s.translate(table) if _NEEDS_ESCAPE.search(s) else s
+
+
+def _col_letter(i: int) -> str:  # 0 -> A, 26 -> AA
+    s = ""
+    i += 1
+    while i:
+        i, r = divmod(i - 1, 26)
+        s = chr(65 + r) + s
+    return s
+
+
+def _cell(ref: str, s_attr: str, v) -> str:
+    """One cell of any value: blank for None, NaN and ±inf, ``t="b"``
+    for a bool, the ``repr`` of a number, else inline text."""
+    if hasattr(v, "item"):  # numpy scalar in an object column
+        v = v.item()
+    if v is None or (isinstance(v, float) and not math.isfinite(v)):
+        # NaN/±inf have no valid OOXML number form — blank cell
+        return ""
+    if isinstance(v, bool):
+        return f'<c r="{ref}"{s_attr} t="b"><v>{int(v)}</v></c>'
+    if isinstance(v, (int, float)):
+        return f'<c r="{ref}"{s_attr}><v>{v!r}</v></c>'
+    txt = _escape(str(v))
+    return f'<c r="{ref}"{s_attr} t="inlineStr"><is><t>{txt}</t></is></c>'
+
+
+def _column_cells(series, letter: str, style: int) -> list[str]:
+    """The cells of one sheet column, rows 2.., one string per row
+    (``""`` for a blank). A numeric or bool column is formatted from
+    its ``tolist()`` by one f-string, with one finite mask per float
+    column; so is a column of only str and None. Any other column goes
+    value by value through :func:`_cell`. Either way the text is what
+    :func:`_cell` makes of the value that iterating the column yields."""
+    s_attr = f' s="{style}"' if style else ""
+    head = f'<c r="{letter}'
+    rows = range(2, len(series) + 2)
+    # extension dtypes (nullable Int64, boolean, ...) hold pd.NA: per value
+    kind = series.dtype.kind if isinstance(series.dtype, np.dtype) else "O"
+    if kind == "f":
+        arr = series.to_numpy()
+        return [
+            f"{head}{r}\"{s_attr}><v>{v!r}</v></c>" if ok else ""
+            for r, v, ok in zip(rows, arr.tolist(), np.isfinite(arr).tolist())
+        ]
+    if kind in "iu":
+        return [
+            f"{head}{r}\"{s_attr}><v>{v}</v></c>"
+            for r, v in zip(rows, series.to_numpy().tolist())
+        ]
+    if kind == "b":
+        return [
+            f"{head}{r}\"{s_attr} t=\"b\"><v>{int(v)}</v></c>"
+            for r, v in zip(rows, series.to_numpy().tolist())
+        ]
+    values = list(series)
+    if all(v.__class__ is str or v is None for v in values):  # text
+        return [
+            "" if v is None
+            else f'{head}{r}"{s_attr} t="inlineStr"><is><t>{_escape(v)}</t></is></c>'
+            for r, v in zip(rows, values)
+        ]
+    return [_cell(f"{letter}{r}", s_attr, v) for r, v in zip(rows, values)]
+
 
 def _write_xlsx_stdlib(sheets, path: str, *, pct_last3: bool) -> str:
     """Dependency-free .xlsx writer — the mirror of the stdlib reader
@@ -231,76 +314,48 @@ def _write_xlsx_stdlib(sheets, path: str, *, pct_last3: bool) -> str:
     (01_source_me.R:34-49) applied as ``s="1"`` on the data cells of
     each sheet's last 3 columns. Produces standard OOXML any Excel /
     LibreOffice / pandas stack opens. Every part carries the same fixed
-    timestamp, so equal frames give byte-equal files."""
-    import math
+    timestamp, so equal frames give byte-equal files.
+
+    A sheet is formatted column by column (:func:`_column_cells`: the
+    column letter once, one f-string per numeric dtype, one finite mask
+    per float column) and its rows are joined with ``zip(*columns)``.
+    The bytes are those of the per-cell writer it replaced, pinned by
+    ``tests/test_xlsx_golden.py``."""
     import zipfile
-    from xml.sax.saxutils import escape as _esc
-
-    def escape(s: str, entities: dict | None = None) -> str:
-        # C0 controls (except \t \n \r) are ILLEGAL in XML 1.0 even
-        # escaped — strip them before entity-escaping, or the part is
-        # unparseable no matter how it's quoted (fuzz-found)
-        s = "".join(c for c in s if c >= " " or c in "\t\n\r")
-        return _esc(s, entities or {})
-
-    def col_letter(i: int) -> str:  # 0 -> A, 26 -> AA
-        s = ""
-        i += 1
-        while i:
-            i, r = divmod(i - 1, 26)
-            s = chr(65 + r) + s
-        return s
-
-    def cell_xml(r: int, c: int, v, style: int) -> str:
-        ref = f"{col_letter(c)}{r}"
-        s_attr = f' s="{style}"' if style else ""
-        if hasattr(v, "item"):  # numpy scalar from pandas itertuples
-            v = v.item()
-        if v is None or (isinstance(v, float) and not math.isfinite(v)):
-            # NaN/±inf have no valid OOXML number form — blank cell
-            return ""
-        if isinstance(v, bool):
-            return f'<c r="{ref}"{s_attr} t="b"><v>{int(v)}</v></c>'
-        if isinstance(v, (int, float)):
-            return f'<c r="{ref}"{s_attr}><v>{v!r}</v></c>'
-        txt = escape(str(v))
-        return f'<c r="{ref}"{s_attr} t="inlineStr"><is><t>{txt}</t></is></c>'
 
     ssml = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
     odrel = "http://schemas.openxmlformats.org/officeDocument/2006/relationships"
     pkgrel = "http://schemas.openxmlformats.org/package/2006/relationships"
 
     def sheet_xml(pdf) -> str:
-        cols = list(pdf.columns)
-        pct_from = len(cols) - 3 if pct_last3 and len(cols) >= 3 else len(cols)
-        rows = [
-            "<row r=\"1\">"
-            + "".join(cell_xml(1, c, str(name), 0) for c, name in enumerate(cols))
-            + "</row>"
-        ]
-        for j, rec in enumerate(pdf.itertuples(index=False), start=2):
-            rows.append(
-                f'<row r="{j}">'
-                + "".join(
-                    cell_xml(
-                        j, c, v, _PCT_STYLE_ID if c >= pct_from else 0
-                    )
-                    for c, v in enumerate(rec)
-                )
-                + "</row>"
+        names = [str(n) for n in pdf.columns]
+        pct_from = len(names) - 3 if pct_last3 and len(names) >= 3 else len(names)
+        letters = [_col_letter(c) for c in range(len(names))]
+        header = "".join(
+            f'<c r="{x}1" t="inlineStr"><is><t>{_escape(n)}</t></is></c>'
+            for x, n in zip(letters, names)
+        )
+        columns = [
+            _column_cells(
+                pdf.iloc[:, c], letters[c], _PCT_STYLE_ID if c >= pct_from else 0
             )
+            for c in range(len(names))
+        ]
+        rows = "".join(
+            f'<row r="{j}">{"".join(cells)}</row>'
+            for j, cells in enumerate(zip(*columns), start=2)
+        )
         return (
             f'<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-            f'<worksheet xmlns="{ssml}"><sheetData>'
-            + "".join(rows)
-            + "</sheetData></worksheet>"
+            f'<worksheet xmlns="{ssml}"><sheetData><row r="1">{header}</row>'
+            f"{rows}</sheetData></worksheet>"
         )
 
     names = list(sheets)
     wb_sheets = "".join(
-        # escape() alone leaves '"' intact — inside a name="..."
-        # attribute that is malformed XML; pass the quot entity map
-        f'<sheet name="{escape(n, {chr(34): "&quot;"})}" '
+        # cell text leaves '"' intact — inside a name="..." attribute
+        # that is malformed XML; escape with the quot entity too
+        f'<sheet name="{_escape(n, _ESCAPE_ATTR)}" '
         f'sheetId="{i+1}" r:id="rId{i+1}"/>'
         for i, n in enumerate(names)
     )

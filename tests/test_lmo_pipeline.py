@@ -22,7 +22,6 @@ from lmo_data_catalog_spark.plans.lmo_pipeline import (
     ARTIFACTS,
     LMOConfig,
     build_all,
-    employment_by_occupation,
     high_opportunity_occupations,
     jo_by_skill_cluster,
     load_inputs,
@@ -601,7 +600,7 @@ def test_region_fanout_write_jobs_do_not_grow_with_regions(spark, inputs, tmp_pa
     )
 
     def sheets_and_jobs(inp, name):
-        wb = employment_by_occupation(inp, CFG)
+        wb = build_all(inp, CFG)["Employment by Occupation for BC and Regions"]
         jobs = _jobs(spark, lambda: write_workbook(wb, str(tmp_path / name)))
         return len(wb), jobs
 
@@ -639,3 +638,35 @@ def test_cache_release_all_unpersists(spark):
     assert cache.release_all() >= 1
     assert not df.storageLevel.useMemory
     assert cache.release_all() == 0  # idempotent, registry cleared
+
+
+def test_build_all_keeps_the_callers_inputs_cached(spark, inputs):
+    """Building the catalog leaves the caller's cached forecast inputs
+    in the cache manager. A plan built through ``spark.sql(text,
+    src=df)`` registers a temp view over ``df``; dropping that view
+    uncaches every cached plan inside it, ``df`` itself included."""
+    manager = spark._jsparkSession.sharedState().cacheManager()
+    build_all(inputs, CFG)
+    for name in ("employment", "job_openings"):
+        df = getattr(inputs, name)
+        assert manager.lookupCachedData(df._jdf).isDefined(), name
+
+
+#: main-thread py4j commands a warm ``build_all`` sends on the seed-7
+#: fixtures, py4j's memory (GC delete) commands not counted: 811
+#: measured, plus a small margin
+BUILD_ALL_PY4J_BUDGET = 840
+
+
+def test_build_all_py4j_budget(monkeypatch, inputs):
+    """Driver budget: a warm ``build_all`` builds its filters and
+    aggregates from SQL text (one round trip per expression) and
+    unpivots each forecast input once. Every column turned back into
+    an ``F.col``, or an unpivot per table, costs round trips again: each
+    element of a list argument (``groupBy``, ``agg``, ``toDF``,
+    ``unpivot``) is one ``add``."""
+    from tests.test_pyboundary import _count_round_trips
+
+    build_all(inputs, CFG)  # warm-up: function lookups, the HOO collect's cache
+    sent = _count_round_trips(monkeypatch, lambda: build_all(inputs, CFG))
+    assert sent["calls"] <= BUILD_ALL_PY4J_BUDGET, dict(sent)

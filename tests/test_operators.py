@@ -28,11 +28,6 @@ def test_clean_names_dedupe(spark):
     assert st.clean_names(df).columns == ["a_b", "a_b_2"]
 
 
-def test_title_case_roundtrip(spark):
-    df = spark.createDataFrame([(1,)], ["geographic_area"])
-    assert st.title_case_names(df).columns == ["Geographic Area"]
-
-
 def test_not_isin_keeps_nulls(spark):
     """R semantics: !x %in% set keeps NA rows (SURVEY F3)."""
     df = spark.createDataFrame(
@@ -41,6 +36,26 @@ def test_not_isin_keeps_nulls(spark):
     kept = df.filter(filters.not_isin("r", ["North", "South East"]))
     assert sorted(x.r for x in kept.collect() if x.r) == ["Kootenay"]
     assert any(x.r is None for x in kept.collect())
+
+
+def test_sql_text_filters_equal_the_column_filters(spark):
+    """``isin_sql``/``not_isin_sql``/``not_rlike_sql`` keep the same rows
+    as their Column forms: NULLs kept by the negations, quotes and
+    backslashes in values taken literally, an empty set matching no
+    row."""
+    df = spark.createDataFrame(
+        [Row(r=v) for v in ["North", "O'Hara", "a\\b", "Kootenay", None]]
+    )
+    for values in (["North", "O'Hara", "a\\b"], []):
+        for col_form, sql_form in (
+            (filters.isin, filters.isin_sql),
+            (filters.not_isin, filters.not_isin_sql),
+        ):
+            want = sorted(map(repr, df.filter(col_form("r", values)).collect()))
+            got = sorted(map(repr, df.filter(sql_form("r", values)).collect()))
+            assert got == want, (col_form.__name__, values)
+    want = df.filter(filters.not_rlike("r", "Non|'")).collect()
+    assert df.filter(filters.not_rlike_sql("r", "Non|'")).collect() == want
 
 
 def test_not_rlike_keeps_nulls(spark):
